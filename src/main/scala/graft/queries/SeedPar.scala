@@ -37,12 +37,12 @@ private[graft] object SeedPar {
   val enabled: Boolean = !sys.env.get("SPARK_GRAFT_SEED_PARALLEL").contains("0")
 
   /** Run the thunks to completion — concurrently on the pool when
-    * enabled, in order otherwise. The first failure propagates (as the
-    * sequential spelling's would); in the parallel arm the already-
-    * submitted siblings still run to completion in the background
-    * (harmless: each is an idempotent memoized seed), in the
-    * sequential arm later thunks never start — both surface the same
-    * exception to the caller. */
+    * enabled, in order otherwise. The first failure in item order
+    * propagates (as the sequential spelling's would); in the parallel
+    * arm only once every already-submitted sibling has finished, so no
+    * detached sub-build keeps running Spark jobs into whatever the
+    * caller does next (the next timed entry, a temp-dir teardown). In
+    * the sequential arm later thunks never start. */
   def all(work: Seq[() => Any]): Unit = { mapAll(work)(_()); () }
 
   /** Fan out `f` over the items and return results in item order —
@@ -53,6 +53,8 @@ private[graft] object SeedPar {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: scala.concurrent.ExecutionContext = pool
-      Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
+      val futures = items.map(a => Future(f(a)))
+      futures.foreach(Await.ready(_, Duration.Inf))
+      futures.map(_.value.get.get)
     }
 }

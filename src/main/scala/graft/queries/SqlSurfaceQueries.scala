@@ -514,8 +514,9 @@ object SqlSurfaceQueries extends QueryModule {
     // WITH RECURSIVE — transitive reachability over the part
     // co-occurrence graph, the SAME statement text in both engines:
     // DuckDB runs its native recursive CTE, the engine runs GraftSql's
-    // bounded iterative-materialization rewrite (OSS Spark has no
-    // recursive CTEs). UNION (not ALL) semantics: each BFS level dedups
+    // bounded iterative-materialization rewrite (Spark 4.1 recurses
+    // natively only with UNION ALL and rejects the UNION this statement
+    // needs). UNION (not ALL) semantics: each BFS level dedups
     // against everything reached so far, so the loop terminates on the
     // cyclic co-occurrence graph. Scale shape: one distributed
     // join+except per level over the CHECKPOINTED frontier — total work

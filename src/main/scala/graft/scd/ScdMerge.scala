@@ -1,7 +1,6 @@
 package graft.scd
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SQL expression builders for the SCD1 merge algebra
@@ -46,10 +45,9 @@ object ScdExpressions {
   * possible) into one row per orderId with the order flattened to top level
   * (reference: ScdType1MergeApp.scala:146-206).
   *
-  * Scale notes: the two windows, the aggregation and both joins all key on
-  * `orderId`, so one hash partitioning is reused across every stage — a
-  * single shuffle of the batch, no broadcast needed (all sides are the same
-  * micro-batch scale), and AQE coalesces the post-shuffle partitions.
+  * Plan: one hash aggregate keyed on `orderId` over the per-row dedup
+  * projection — one shuffle of the batch, partially aggregated before
+  * it, and no joins or windows for AQE to re-plan between stages.
   */
 object BatchFlattener {
 
@@ -60,23 +58,10 @@ object BatchFlattener {
     "totalAmount", "currency", "customerId", "shippingAddressId", "createdTs")
 
   /** order_stream batch → one row per orderId:
-    * (xid, csn, dwhProcessedTs, orderId, <flat order cols>, orderBefore,
+    * (orderId, xid, csn, dwhProcessedTs, <flat order cols>, orderBefore,
     * orderDetails struct, lineItems array). */
   def flatten(orderStream: DataFrame): DataFrame =
     assemble(flatProjection(orderStream))
-
-  /** Like `flatten`, but persists the shared per-row dedup projection for
-    * the duration of `use` and unpersists it eagerly afterwards. The
-    * three downstream derivations (best order row, best detail, merged
-    * line items) each re-evaluate the quadratic dedup-HOF chain
-    * otherwise — 3× the dominant narrow cost of the flatten. Callers
-    * must fully materialize the result inside `use`. */
-  def flattenCached[T](orderStream: DataFrame)(use: DataFrame => T): T = {
-    val flat = flatProjection(orderStream)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try use(assemble(flat))
-    finally flat.unpersist(blocking = false)
-  }
 
   /** Per-row dedup: keep max-version element per key inside each array,
     * then surface the single order/detail element (ANSI-safe
@@ -88,50 +73,30 @@ object BatchFlattener {
       s"try_element_at(${dedupArray("orderDetails", "orderId")}, 1) AS d",
       s"${dedupArray("lineItems", "lineItemId")} AS lineItems")
 
-  private def assemble(flat: DataFrame): DataFrame = {
-    // Best order row per orderId: highest order version first (reference:
-    // :182-186 tiebreaks on dwhProcessedTs, which is constant within a
-    // micro-batch here — csn is the deterministic refinement).
-    val wOrd = Window.partitionBy("orderId")
-      .orderBy(desc_nulls_last("o.version"), desc_nulls_last("csn"))
-    val bestOrder = flat
-      .withColumn("_rn", row_number().over(wOrd))
-      .filter(col("_rn") === 1)
+  private def assemble(flat: DataFrame): DataFrame =
+    flat.groupBy("orderId")
+      .agg(
+        // Best order row: highest version, then highest csn (reference:
+        // :182-186 tiebreaks on dwhProcessedTs, constant within a batch).
+        // NULL struct fields order lowest, so max_by ranks exactly like a
+        // desc-nulls-last window.
+        expr("max_by(struct(xid, csn, dwhProcessedTs, o), struct(o.version, csn))").as("r"),
+        // Null details never compete (reference: :189-194), and a NULL
+        // orderId, which the reference's joins never match, gets no
+        // detail and no line items.
+        expr("max_by(d, struct(d.version, csn)) " +
+          "FILTER (WHERE d IS NOT NULL AND orderId IS NOT NULL)").as("orderDetails"),
+        // Line items merge across rows (reference: :196-200); an order
+        // whose arrays are all empty gathers none and gets NULL, not [].
+        expr("flatten(collect_list(lineItems) " +
+          "FILTER (WHERE size(lineItems) > 0 AND orderId IS NOT NULL))").as("lis"))
       .select(
-        Seq(col("xid"), col("csn"), col("dwhProcessedTs"), col("orderId")) ++
-          orderFieldNames.map(f => col(s"o.$f").as(f)) :+
-          col("o.before").as("orderBefore"): _*)
-
-    // Null details are filtered BEFORE the window (reference: :189-194) —
-    // ranking them would silently drop a valid detail from another row
-    // whenever the rank-1 row's detail is null.
-    val wDet = Window.partitionBy("orderId")
-      .orderBy(desc_nulls_last("d.version"), desc_nulls_last("csn"))
-    val bestDetail = flat
-      .select(col("orderId"), col("csn"), col("d"))
-      .filter(col("d").isNotNull)
-      .withColumn("_rn", row_number().over(wDet))
-      .filter(col("_rn") === 1)
-      .select(col("orderId"), col("d").as("orderDetails"))
-
-    // Line items merge across rows: concatenate all non-empty arrays for
-    // the order, then version-dedup by lineItemId (reference: :196-200).
-    // Orders whose rows all have empty arrays get NULL lineItems from the
-    // left join — not [] — matching the reference's pre-filter.
-    val mergedLi = flat
-      .filter(col("lineItems").isNotNull && size(col("lineItems")) > 0)
-      .groupBy("orderId")
-      .agg(flatten_(col("lineItems")).as("lineItems"))
-      .selectExpr("orderId", s"${dedupArray("lineItems", "lineItemId")} AS lineItems")
-
-    bestOrder
-      .join(bestDetail, Seq("orderId"), "left")
-      .join(mergedLi, Seq("orderId"), "left")
-  }
-
-  // flatten(collect_list(...)) — named to avoid clashing with this method.
-  private def flatten_(c: org.apache.spark.sql.Column) =
-    org.apache.spark.sql.functions.flatten(collect_list(c))
+        Seq(col("orderId"), col("r.xid"), col("r.csn"), col("r.dwhProcessedTs")) ++
+          orderFieldNames.map(f => col(s"r.o.$f").as(f)) ++ Seq(
+          col("r.o.before").as("orderBefore"),
+          col("orderDetails"),
+          expr(s"CASE WHEN size(lis) > 0 THEN ${dedupArray("lis", "lineItemId")} END")
+            .as("lineItems")): _*)
 }
 
 /** Clause-ordered versioned upsert without Delta: emulates the reference's
@@ -149,11 +114,13 @@ object BatchFlattener {
   *    child-only rows from inserting orphans);
   *  - unreferenced target rows pass through unchanged.
   *
-  * Scale notes: both sides are pre-partitioned by orderId when the source
-  * comes out of BatchFlattener; the join is a plain equi-join Catalyst can
-  * execute as SMJ (large-large) or broadcast (small micro-batch vs large
-  * target — AQE decides from runtime sizes). The output is the full new
-  * table snapshot; callers persist it atomically (ParquetTable.swap).
+  * Plan: a sort-merge full outer join on orderId (a full outer join
+  * cannot broadcast), so the target is shuffled on the key every batch.
+  * The join float-normalizes its DOUBLE key (NaN, -0.0) on top of the
+  * key BatchFlattener's aggregate already partitioned by, so that
+  * partitioning does not satisfy the join and the batch side is
+  * shuffled a second time — a batch-sized exchange. The output is the
+  * full new table snapshot; callers persist it atomically (ParquetTable.swap).
   */
 object MergeExecutor {
 

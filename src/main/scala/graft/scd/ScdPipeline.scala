@@ -40,17 +40,14 @@ object ScdPipeline {
         .resolve("orders_current").toString
       // Micro-batch 1: base inserts bootstrap the bucketed table (with
       // the merge's insert guard — child-only rows never orphan).
-      BatchFlattener.flattenCached(
-        stream.filter(col("xid").startsWith("tx-"))) { bootstrap =>
-        BucketedTable.bootstrap(
-          spark, bootstrap.filter(col("version").isNotNull), dir, "orderId", NumBuckets)
-      }
+      val bootstrap = BatchFlattener.flatten(stream.filter(col("xid").startsWith("tx-")))
+      BucketedTable.bootstrap(
+        spark, bootstrap.filter(col("version").isNotNull), dir, "orderId", NumBuckets)
       // Micro-batch 2: order updates (txu-) + detail-only updates (txs-),
       // collapsed per order by the flattener, merged per affected bucket.
-      BatchFlattener.flattenCached(
-        stream.filter(col("xid").startsWith("txu-") || col("xid").startsWith("txs-"))) { updates =>
-        BucketedTable.merge(spark, updates, dir, "orderId", NumBuckets)
-      }
+      val updates = BatchFlattener.flatten(
+        stream.filter(col("xid").startsWith("txu-") || col("xid").startsWith("txs-")))
+      BucketedTable.merge(spark, updates, dir, "orderId", NumBuckets)
       BucketedTable.vacuum(dir, NumBuckets)
       val df = BucketedTable.read(spark, dir).persist(StorageLevel.MEMORY_AND_DISK)
       df.count()

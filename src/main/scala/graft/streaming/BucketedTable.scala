@@ -138,7 +138,7 @@ object BucketedTable {
   def merge(spark: SparkSession, source: DataFrame, dir: String, keyCol: String, numBuckets: Int): Unit = {
     // The source plan is evaluated twice (affected-bucket discovery, then
     // the staged merge write) — persist it for the merge's duration so an
-    // expensive upstream (e.g. the batch flattener's windows) runs once.
+    // expensive upstream (e.g. the batch flattener's aggregate) runs once.
     // Micro-batch scale: bounded by the batch, not the table.
     val src = source.withColumn("bkt", bucketOf(keyCol, numBuckets))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -1,6 +1,14 @@
 package graft.streaming
 
+import scala.util.Using
+
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.OneToOneDependency
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.FileScanRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -159,19 +167,46 @@ object CdcStreaming {
 
   /** One micro-batch of the SCD1 maintenance: bootstrap when the target
     * doesn't exist (reference: ScdType1MergeApp.scala:74-81), else merge
-    * (reference: :83-132); always an atomic snapshot swap. */
+    * (reference: :83-132); always an atomic snapshot swap. An empty batch
+    * publishes nothing. */
   def mergeBatch(spark: SparkSession, batch: DataFrame, targetDir: String): Unit = {
-    if (batch.isEmpty) return
-    BatchFlattener.flattenCached(batch) { source =>
-      val result =
-        if (!ParquetTable.exists(targetDir))
-          // Bootstrap applies the merge's insert guard too: the reference's
-          // overwrite bootstrap (ScdType1MergeApp.scala:74-81) would admit a
-          // child-only orphan if a child-update event landed in the very
-          // first micro-batch; filtering keeps bootstrap ≡ merge-into-empty.
-          source.filter(col("version").isNotNull)
-        else MergeExecutor.merge(ParquetTable.read(spark, targetDir), source)
-      ParquetTable.swap(spark, result, targetDir)
+    if (isEmptyBatch(batch)) return
+    val source = BatchFlattener.flatten(batch)
+    val result =
+      if (!ParquetTable.exists(targetDir))
+        // Bootstrap applies the merge's insert guard too: the reference's
+        // overwrite bootstrap (ScdType1MergeApp.scala:74-81) would admit a
+        // child-only orphan if a child-update event landed in the very
+        // first micro-batch; filtering keeps bootstrap ≡ merge-into-empty.
+        source.filter(col("version").isNotNull)
+      // The target holds only this merge's output, whose schema is the
+      // flattened batch's: no footer-inference job to read it.
+      else MergeExecutor.merge(
+        spark.read.schema(source.schema).parquet(ParquetTable.currentPath(targetDir)), source)
+    ParquetTable.swap(spark, result, targetDir)
+  }
+
+  /** Whether a micro-batch holds no rows, without a Spark job when it is
+    * a file-stream batch: `foreachBatch` hands over a LogicalRDD whose RDD
+    * is one-to-one steps over a single FileScanRDD (which drop rows, never
+    * add any), and the parquet footers count the rows — a new file can be
+    * footer-only, as the parquet sink writes for a batch without output.
+    * Any other plan falls back to `isEmpty`, which runs a job. */
+  private[streaming] def isEmptyBatch(batch: DataFrame): Boolean = {
+    @annotation.tailrec
+    def scan(rdd: RDD[_]): Option[FileScanRDD] = (rdd, rdd.dependencies) match {
+      case (f: FileScanRDD, _) => Some(f)
+      case (_, Seq(d: OneToOneDependency[_])) => scan(d.rdd)
+      case _ => None
+    }
+    Some(batch.queryExecution.logical).collect { case r: LogicalRDD => r.rdd }.flatMap(scan)
+      .map(_.filePartitions.flatMap(_.files).map(_.toPath).distinct)
+      .filter(_.forall(_.getName.endsWith(".parquet"))) match {
+      case Some(paths) =>
+        val conf = batch.sparkSession.sparkContext.hadoopConfiguration
+        paths.forall(p => Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(p, conf)))(
+          _.getRecordCount == 0))
+      case None => batch.isEmpty
     }
   }
 
@@ -211,13 +246,12 @@ object CdcStreaming {
     * as the snapshot path). */
   def mergeBatchBucketed(
       spark: SparkSession, batch: DataFrame, targetDir: String, numBuckets: Int): Unit = {
-    if (batch.isEmpty) return
-    BatchFlattener.flattenCached(batch) { source =>
-      if (!BucketedTable.exists(targetDir))
-        BucketedTable.bootstrap(
-          spark, source.filter(col("version").isNotNull), targetDir, "orderId", numBuckets)
-      else BucketedTable.merge(spark, source, targetDir, "orderId", numBuckets)
-    }
+    if (isEmptyBatch(batch)) return
+    val source = BatchFlattener.flatten(batch)
+    if (!BucketedTable.exists(targetDir))
+      BucketedTable.bootstrap(
+        spark, source.filter(col("version").isNotNull), targetDir, "orderId", numBuckets)
+    else BucketedTable.merge(spark, source, targetDir, "orderId", numBuckets)
   }
 }
 

@@ -12,8 +12,9 @@ import org.apache.spark.sql.DataFrame
   * invariants, q34's shared distinct, the DML seed slice) now routes
   * through [[cut]], which keeps the local default but honors
   * `spark.graft.checkpoint.reliableDir`: when set, intermediates go
-  * through RELIABLE `Dataset.checkpoint` into that directory (set once
-  * per SparkContext on first use), surviving executor loss at the cost
+  * through RELIABLE `Dataset.checkpoint` into that directory (set on
+  * first use, and again whenever the conf names another directory or
+  * the set one was deleted), surviving executor loss at the cost
   * of a filesystem round-trip — the 100 TB deployment spelling. The
   * result is the same rows either way; only the recovery story and the
   * storage medium differ. */
@@ -27,12 +28,17 @@ object Checkpoints {
     s.conf.getOption("spark.graft.checkpoint.reliableDir")
       .filter(_.nonEmpty) match {
       case Some(dir) =>
-        // Set lazily (harnesses that never opt in never create the
-        // dir) and only when UNSET — setCheckpointDir mints a fresh
-        // UUID subdir per call, and a checkpoint dir the user already
-        // chose themselves is equally reliable and must be respected.
-        if (s.sparkContext.getCheckpointDir.isEmpty)
-          s.sparkContext.setCheckpointDir(dir)
+        // Set lazily (harnesses that never opt in never create the dir),
+        // and only when the context's dir is not a child of `dir` or no
+        // longer exists: setCheckpointDir mints a fresh UUID subdir per
+        // call, while a dir set for another reliableDir, or deleted
+        // since, would send the cut somewhere stale.
+        val sc = s.sparkContext
+        val root = new org.apache.hadoop.fs.Path(dir)
+        val fs = root.getFileSystem(sc.hadoopConfiguration)
+        val current = sc.getCheckpointDir.map(new org.apache.hadoop.fs.Path(_))
+        if (!current.exists(c => c.getParent == fs.makeQualified(root) && fs.exists(c)))
+          sc.setCheckpointDir(dir)
         df.checkpoint(eager = true)
       case None => df.localCheckpoint(eager = true)
     }

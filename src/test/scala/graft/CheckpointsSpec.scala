@@ -21,7 +21,9 @@ class CheckpointsSpec extends SparkSuite {
     val localRows = GraftSql.sql(s, rcte).collect().map(_.getInt(0)).sorted
     assert(localRows.toSeq == (1 to 5))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt")
+    // A process-lifetime scratch dir, not deleted here: the shared
+    // context keeps pointing at its checkpoint dir after this test.
+    val dir = graft.tables.TmpDirs.create("graft-reliable-ckpt")
     s.conf.set("spark.graft.checkpoint.reliableDir", dir.toString)
     try {
       val reliableRows = GraftSql.sql(s, rcte).collect().map(_.getInt(0)).sorted
@@ -32,11 +34,29 @@ class CheckpointsSpec extends SparkSuite {
         try s2.filter(java.nio.file.Files.isRegularFile(_)).count()
         finally s2.close()
       assert(nFiles > 0, s"no reliable checkpoint files under $dir")
-    } finally {
-      s.conf.unset("spark.graft.checkpoint.reliableDir")
-      try graft.tables.ValueIndex.deleteTree(dir)
-      catch { case scala.util.control.NonFatal(_) => () }
+    } finally s.conf.unset("spark.graft.checkpoint.reliableDir")
+  }
+
+  test("a checkpoint dir outside reliableDir, or deleted, is set again") {
+    val s = spark
+    import s.implicits._
+    val sc = s.sparkContext
+    def cutUnder(dir: java.nio.file.Path): Unit = {
+      s.conf.set("spark.graft.checkpoint.reliableDir", dir.toString)
+      try {
+        val cut = Checkpoints.cut(Seq(1, 2, 3).toDF("v"))
+        assert(cut.collect().map(_.getInt(0)).sorted.sameElements(Array(1, 2, 3)))
+      } finally s.conf.unset("spark.graft.checkpoint.reliableDir")
+      val cur = sc.getCheckpointDir.map(d => java.nio.file.Paths.get(new java.net.URI(d)))
+      assert(cur.exists(c => c.getParent == dir && java.nio.file.Files.isDirectory(c)),
+        s"checkpoint dir $cur is not a live child of $dir")
     }
+    val a = graft.tables.TmpDirs.create("graft-ckpt-a")
+    val b = graft.tables.TmpDirs.create("graft-ckpt-b")
+    cutUnder(a)
+    cutUnder(b) // the context's dir belongs to another reliableDir
+    graft.tables.ValueIndex.deleteTree(b)
+    cutUnder(b) // the context's dir was deleted
   }
 
   test("default arm stays a local checkpoint (no checkpoint dir required)") {

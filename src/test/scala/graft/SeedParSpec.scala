@@ -31,6 +31,17 @@ class SeedParSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(e.getMessage == "seed boom")
   }
 
+  test("a failure surfaces only after a slow sibling has finished") {
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[RuntimeException] {
+      SeedPar.all(Seq(
+        () => { Thread.sleep(500); finished.set(true) },
+        () => throw new RuntimeException("seed boom")))
+    }
+    assert(e.getMessage == "seed boom")
+    assert(finished.get, "the failure surfaced while a sibling was still running")
+  }
+
   test("nested fan-out makes progress (the DML seeder shape)") {
     // A fan-out whose thunks themselves fan out: on a bounded pool the
     // outer Awaits can starve the inner tasks; the cached pool must not.
