@@ -50,6 +50,36 @@ object Bench {
     if (f.length < 8) -1L else f(7)
   }
 
+  /** What the contention sampler reads from one `/proc/<pid>/stat`
+    * line: the command name, whether the task is a kernel thread, and
+    * its cumulative utime+stime in jiffies. */
+  private[graft] final case class ProcStat(comm: String, kernelThread: Boolean, jiffies: Long)
+
+  /** PF_KTHREAD in the flags field of `/proc/<pid>/stat`: set by the
+    * kernel for its own threads only, unlike `comm`, which any process
+    * can set (prctl PR_SET_NAME). */
+  private val PfKthread = 0x00200000L
+
+  /** Parses one `/proc/<pid>/stat` line; None when it is malformed.
+    * `comm` sits in parentheses and may itself contain spaces and ')',
+    * so the fields are split only after the LAST ')': flags, utime and
+    * stime are fields 9, 14 and 15 of the line, i.e. 6, 11 and 12 after
+    * the name. */
+  private[graft] def parseProcStat(line: String): Option[ProcStat] = {
+    val open = line.indexOf('(')
+    val close = line.lastIndexOf(')')
+    if (open < 0 || close < open) None
+    else {
+      val rest = line.substring(close + 1).trim.split(" ")
+      if (rest.length < 13) None
+      else for {
+        flags <- rest(6).toLongOption
+        utime <- rest(11).toLongOption
+        stime <- rest(12).toLongOption
+      } yield ProcStat(line.substring(open + 1, close), (flags & PfKthread) != 0, utime + stime)
+    }
+  }
+
   /** This JVM's cumulative CPU time (ns) — Spark local mode runs
     * everything (executors, GC) in-process, so this IS the bench's own
     * footprint. */
@@ -339,27 +369,30 @@ object Bench {
       // naming the culprit (a neighbor build? kcompactd under this
       // run's own memory pressure?) makes the artifact self-explaining.
       val culprits = scala.collection.mutable.LinkedHashSet.empty[String]
-      /** (pid, comm) → cumulative utime+stime jiffies for every /proc
-        * entry, self excluded — one directory scan, ~1 ms. */
-      private def pidJiffies(): Map[(Int, String), Long] = {
+      /** (pid, comm) → parsed stat for every /proc entry, self
+        * excluded — one directory scan, ~1 ms. */
+      private def pidJiffies(): Map[(Int, String), ProcStat] = {
         val self = ProcessHandle.current().pid()
         val entries = Option(new java.io.File("/proc").listFiles())
           .getOrElse(Array.empty[java.io.File])
         entries.iterator.flatMap { f =>
           f.getName.toIntOption.filter(_.toLong != self).flatMap { pid =>
-            try {
-              val st = java.nio.file.Files.readString(
-                java.nio.file.Paths.get(f.getPath, "stat"))
-              // fields after the ")" are space-split; utime/stime are
-              // positions 12/13 of the whole line (comm may contain
-              // spaces, so split only after the closing paren).
-              val rest = st.substring(st.lastIndexOf(')') + 2).split(" ")
-              val comm = st.substring(st.indexOf('(') + 1, st.lastIndexOf(')'))
-              Some((pid, comm) -> (rest(11).toLong + rest(12).toLong))
-            } catch { case _: Throwable => None }
+            try parseProcStat(java.nio.file.Files.readString(
+                java.nio.file.Paths.get(f.getPath, "stat"))).map(p => (pid, p.comm) -> p)
+            catch { case _: Throwable => None }
           }
         }.toMap
       }
+      /** Cores a pid used since the last sample. A pid ABSENT from the
+        * baseline accumulated all its jiffies inside this window
+        * (processes spawned mid-window are the likeliest culprits — a
+        * baseline of their own jiffies zeroed exactly those; r15
+        * review). Capped at
+        * the core count: a pid the baseline merely failed to stat
+        * would otherwise attribute its whole lifetime to one window. */
+      private def coresSince(k: (Int, String), p: ProcStat, dt: Double): Double =
+        math.min(nCpus.toDouble,
+          (p.jiffies - perPid.get(k).map(_.jiffies).getOrElse(0L)) / 100.0 / dt)
       def sample(): Unit = synchronized {
         loadavg().split("\\s+").headOption.flatMap(_.toDoubleOption)
           .foreach(l => if (l > loadPeak1) loadPeak1 = l)
@@ -369,21 +402,21 @@ object Bench {
           val b = totalBusyJiffies(); val o = ownCpuNanos()
           val st = stealJiffies()
           val pj = pidJiffies()
-          // kworker CPU is the guest's own DEFERRED work — on this
-          // single-tenant box overwhelmingly page-cache writeback of
-          // the bench's own writes (r17: heavy-write runs tripped the
-          // 1.5-core external breach on a kworker blip with an EMPTY
-          // culprit list while every calibration axis read clean —
-          // r17_mid, and this session's r17b_base at ext 1.56). Kernel
-          // threads never belong to a neighboring tenant, so they are
-          // excluded from the breach signal and stamped separately
-          // (kworker_peak_cores) so magnitude stays visible. A real
-          // external writer's own USER cpu still counts and still
-          // names itself in culprits.
+          // Kernel-thread CPU is the guest's own DEFERRED work — on
+          // this single-tenant box overwhelmingly kworker page-cache
+          // writeback of the bench's own writes (r17: heavy-write runs
+          // tripped the 1.5-core external breach on a kworker blip with
+          // an EMPTY culprit list while every calibration axis read
+          // clean — r17_mid, and r17b_base at ext 1.56). Kernel threads
+          // never belong to a neighboring tenant, so they are excluded
+          // from the breach signal and stamped separately
+          // (kworker_peak_cores, named for the kworkers that are nearly
+          // all of it) so magnitude stays visible. They are recognized
+          // by PF_KTHREAD, not by name: a user process calling itself
+          // "kworker/0:1" still counts and still names itself in
+          // culprits.
           val kw = pj.iterator.collect {
-            case ((pid, comm), v) if comm.startsWith("kworker") =>
-              math.min(nCpus.toDouble,
-                (v - perPid.getOrElse((pid, comm), 0L)) / 100.0 / dt)
+            case (k, p) if p.kernelThread => coresSince(k, p, dt)
           }.sum
           if (kw > kworkerPeakCores) kworkerPeakCores = kw
           var breached = false
@@ -400,16 +433,7 @@ object Bench {
           }
           if (breached && culprits.size < 12) {
             pj.toSeq
-              // A pid ABSENT from the baseline accumulated all its
-              // jiffies inside this window (processes spawned mid-
-              // window are the likeliest culprits — defaulting to v
-              // zeroed exactly those; r15 review). Cap at the core
-              // count: a pid the baseline merely failed to stat would
-              // otherwise attribute its whole lifetime to one window.
-              .map { case (k, v) =>
-                (k, math.min(nCpus.toDouble,
-                  (v - perPid.getOrElse(k, 0L)) / 100.0 / dt))
-              }
+              .map { case (k, p) => (k, coresSince(k, p, dt)) }
               .filter(_._2 > 0.2).sortBy(-_._2).take(3)
               .foreach { case ((pid, comm), cores) =>
                 culprits += f"$comm/$pid:$cores%.1f"
@@ -570,9 +594,9 @@ object Bench {
     // never for "a detected breach was dropped".
     val startBusy =
       loadStart.split("\\s+").headOption.flatMap(_.toDoubleOption).map(_ > 1.5)
-    // The whole-run breach excludes kworker (kernel-deferred, i.e. the
-    // guest's own writeback) CPU — see the sampler comment; both the
-    // raw and the kworker-excluded peaks are stamped so the exclusion
+    // The whole-run breach excludes kernel-thread (kernel-deferred, i.e.
+    // the guest's own writeback) CPU — see the sampler comment; both the
+    // raw and the kernel-thread-excluded peaks are stamped so the exclusion
     // is auditable per run.
     val contended =
       if (contention.extNonKwPeakCores > 1.5) "true"

@@ -52,6 +52,23 @@ object SparkSessions {
       // saved work grows with event count. Re-enable per session when
       // the metric is wanted.
       .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
+      // Generated-class cache (static; read once, when the JVM first
+      // touches CodeGenerator). Spark's default of 100 is a Guava cache
+      // split into 4 LRU segments of ~25 entries, keyed by (context class
+      // loader, code body), so driver and task threads each hold their
+      // own copy of a class. A streaming run cycles its classes through
+      // ingest, merge and the SQL shapes once per micro-batch, which
+      // evicted nearly every one before its next use: a cdcbench trickle
+      // timed phase (seed 2) compiled 204 classes, against 20 with this
+      // setting. A whole cdcbench run holds 168-238 keys, so no segment
+      // fills; see README "Session settings".
+      .config("spark.sql.codegen.cache.maxEntries", "2048")
+      // Delete the files of a reliable Dataset.checkpoint once the
+      // checkpointed RDD is garbage collected (Checkpoints.cut under
+      // spark.graft.checkpoint.reliableDir). Read once, when the
+      // SparkContext starts, so it cannot be scoped to that arm; local
+      // checkpoints are unaffected.
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
 
   /** Path of a testdata table under an sf dir. */
   def tablePath(sfDir: String, name: String): String = {

@@ -35,7 +35,8 @@ import org.apache.spark.sql.functions._
   * no window, even when the group key is a constant-cardinality column.
   *
   * The only collect is the (group, bin) histogram (bounded by |g| ×
-  * bins); the per-group counts are derived from it in the driver.
+  * bins, and capped at `maxBins` rows); the per-group counts are
+  * derived from it in the driver.
   * Ordering is (score DESC, tie ASC); `tie` must be row-unique within a
   * group so the boundary row — and therefore every tie-crossing tile
   * edge — is deterministic and matches the window-function oracle
@@ -45,10 +46,16 @@ import org.apache.spark.sql.functions._
   *
   * @param binScale histogram granularity: bin = floor(score * binScale).
   *        Pick so (score range × binScale) stays ≤ ~10⁴ per group.
+  * @param maxBins most (group, bin) histogram rows the driver collects;
+  *        a histogram larger than that fails loudly instead of
+  *        collecting one row per distinct score.
   */
 object ExactNtile {
 
   private case class Boundary(g: String, bin: Long, residual: Long, rankIdx: Int)
+
+  /** Default histogram cap: ~10⁴ bins for each of 100 groups. */
+  val DefaultMaxBins: Int = 1000000
 
   /** Driver-side boundary location: ONE histogram pass (the shuffled
     * (group, bin) agg, collected — bounded by groups × bins), from
@@ -59,16 +66,21 @@ object ExactNtile {
     * rank edges. */
   private def boundarySpecs(
       df: DataFrame, group: String, score: String, tie: String,
-      tiles: Int, binScale: Double): (DataFrame, Seq[Boundary]) = {
+      tiles: Int, binScale: Double, maxBins: Int): (DataFrame, Seq[Boundary]) = {
     val spark = df.sparkSession
     import spark.implicits._
     val binned = df
       .withColumn("_g", col(group).cast("string"))
       .withColumn("_bin", floor(col(score) * lit(binScale)).cast("long"))
 
+    val histRows = binned.groupBy(col("_g"), col("_bin")).count()
+      .limit(maxBins + 1).as[(String, Long, Long)].collect()
+    require(histRows.length <= maxBins,
+      s"ExactNtile: the ($group, bin) histogram of $score has more than $maxBins rows " +
+        s"at binScale $binScale; pick binScale so that (score range × binScale) " +
+        "stays ≤ ~10⁴ per group")
     val hist: Map[String, Seq[(Long, Long)]] =
-      binned.groupBy(col("_g"), col("_bin")).count()
-        .as[(String, Long, Long)].collect()
+      histRows
         .groupBy(_._1)
         .map { case (g, rows) =>
           // score DESC order ↔ bin DESC order
@@ -104,10 +116,10 @@ object ExactNtile {
     * broadcast joins; the native group column rides along. */
   private def boundaryFrame(
       df: DataFrame, group: String, score: String, tie: String,
-      tiles: Int, binScale: Double): Option[DataFrame] = {
+      tiles: Int, binScale: Double, maxBins: Int): Option[DataFrame] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (binned, bnds) = boundarySpecs(df, group, score, tie, tiles, binScale)
+    val (binned, bnds) = boundarySpecs(df, group, score, tie, tiles, binScale, maxBins)
     if (bnds.isEmpty) return None
 
     // (3) refine: rank ONLY the boundary-bin rows. The window partitions
@@ -138,9 +150,9 @@ object ExactNtile {
     * edge). No window over a group-keyed partition anywhere. */
   def boundaries(
       df: DataFrame, group: String, score: String, tie: String,
-      tiles: Int, binScale: Double = 1024.0): DataFrame = {
+      tiles: Int, binScale: Double = 1024.0, maxBins: Int = DefaultMaxBins): DataFrame = {
     require(tiles >= 1, s"tiles must be >= 1, got $tiles")
-    boundaryFrame(df, group, score, tie, tiles, binScale) match {
+    boundaryFrame(df, group, score, tie, tiles, binScale, maxBins) match {
       case Some(bf) =>
         bf.select(col(group), col("_j").as("boundary_idx"),
           col("_s").as("b_score"), col("_t").as("b_tie"))
@@ -157,12 +169,13 @@ object ExactNtile {
       tie: String,
       tiles: Int,
       tileCol: String = "tile",
-      binScale: Double = 1024.0): DataFrame = {
+      binScale: Double = 1024.0,
+      maxBins: Int = DefaultMaxBins): DataFrame = {
     require(tiles >= 1, s"tiles must be >= 1, got $tiles")
     if (!df.sparkSession.conf.getOption("spark.graft.ntile.fused").contains("false"))
-      return withTileFused(df, group, score, tie, tiles, tileCol, binScale)
+      return withTileFused(df, group, score, tie, tiles, tileCol, binScale, maxBins)
     val binned = df.withColumn("_g", col(group).cast("string"))
-    boundaryFrame(df, group, score, tie, tiles, binScale) match {
+    boundaryFrame(df, group, score, tie, tiles, binScale, maxBins) match {
       case None => binned.drop("_g").withColumn(tileCol, lit(1))
       case Some(bf) =>
         // (4) assign: tile = 1 + #boundaries the row falls strictly
@@ -208,10 +221,10 @@ object ExactNtile {
     * Opt out (the r16 spelling) with spark.graft.ntile.fused=false. */
   private def withTileFused(
       df: DataFrame, group: String, score: String, tie: String,
-      tiles: Int, tileCol: String, binScale: Double): DataFrame = {
+      tiles: Int, tileCol: String, binScale: Double, maxBins: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (binned, bnds) = boundarySpecs(df, group, score, tie, tiles, binScale)
+    val (binned, bnds) = boundarySpecs(df, group, score, tie, tiles, binScale, maxBins)
     val outCols = (df.columns.toSeq :+ tileCol).map(col)
     if (bnds.isEmpty)
       return binned.drop("_g", "_bin").withColumn(tileCol, lit(1))

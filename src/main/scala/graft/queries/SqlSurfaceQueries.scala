@@ -167,10 +167,13 @@ object SqlSurfaceQueries extends QueryModule {
       // statements (one per table) each overlap per guide §2.6 — the
       // per-statement commit protocol (read-snapshot → rewrite →
       // atomic publish) is driver-heavy with small jobs, the exact
-      // shape concurrent FIFO jobs back-fill. Per-table commit locks
-      // plus uid-suffixed view names keep the arms independent; each
-      // table still sees exactly its one statement, so the oracle
-      // semantics per table are unchanged.
+      // shape concurrent FIFO jobs back-fill. The arms stay independent
+      // because their tables, scratch dirs and uid-suffixed view names
+      // are disjoint: ParquetTable's per-directory publish lock
+      // (occLocks) guards only each commit, and GraftSql.sql's
+      // per-name locks only serialize statements that mount the same
+      // registered name. Each table still sees exactly its one
+      // statement, so the oracle semantics per table are unchanged.
       val names = SeedPar.mapAll(Seq("upd", "del", "mrg", "ovw", "rpw", "nms"))(mk)
       val (u, d, m) = (names(0), names(1), names(2))
       val (o, r, nm) = (names(3), names(4), names(5))

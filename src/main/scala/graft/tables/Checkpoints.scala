@@ -17,7 +17,14 @@ import org.apache.spark.sql.DataFrame
   * the set one was deleted), surviving executor loss at the cost
   * of a filesystem round-trip — the 100 TB deployment spelling. The
   * result is the same rows either way; only the recovery story and the
-  * storage medium differ. */
+  * storage medium differ.
+  *
+  * Reliable checkpoint files are deleted once the checkpointed RDD is
+  * garbage collected, because every graft session sets
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true`
+  * (SparkSessions.builder). Spark reads that setting once, when the
+  * SparkContext starts, so a context created elsewhere without it keeps
+  * every reliable cut's files until the directory is removed. */
 object Checkpoints {
 
   /** Eagerly materialize `df` with its lineage cut — local blocks by

@@ -1225,6 +1225,7 @@ object GraftSql {
       // as `a.b`. Runs BEFORE the plain mounts below: once `db.t` has
       // become a token, a plain registered `t` can no longer word-match
       // inside it.
+      withNameLocks(s, mountedNames(s, rewritten)) {
       val dottedRestores = registry.of(s).keysIterator
         .filter(_.contains(".")).toSeq.sortBy(-_.length)
         .flatMap { name =>
@@ -1294,6 +1295,48 @@ object GraftSql {
       try s.sql(rewritten)
       finally (dottedRestores ++ viewRestores ++ restores).foreach(_())
       }
+      }
+  }
+
+  /** One lock per registered table or view name and session. The
+    * fall-through arm of [[sql]] mounts each name it mentions as a
+    * session temp view, analyzes, and puts back whatever temp view the
+    * name had before; two statements on the same name at once would
+    * otherwise analyze against each other's mounts and restore each
+    * other's mount in place of the user's view. */
+  private val nameLocks =
+    new SessionMemo[String, java.util.concurrent.locks.ReentrantLock]
+
+  /** Registered table and view names `text` mentions outside literals,
+    * closed over the stored SQL of the views among them: every name the
+    * statement's mounts and nested view expansions will mount. */
+  private def mountedNames(s: SparkSession, text: String): Set[String] = {
+    val views = viewRegistry.of(s)
+    def mentioned(t: String): Set[String] =
+      (registry.of(s).keysIterator ++ views.keysIterator).filter { n =>
+        if (n.contains("."))
+          dottedIdentRegex(n).findAllMatchIn(t).exists(m => !inLiteral(t, m.start))
+        else wordOutsideQuotes(t, n)
+      }.toSet
+    var found = Set.empty[String]
+    var next = mentioned(text)
+    while (next.nonEmpty) {
+      found ++= next
+      next = next.flatMap(n => views.get(n).toSeq.flatMap(mentioned)) -- found
+    }
+    found
+  }
+
+  /** Runs `body` holding the locks of `names`, taken in sorted order.
+    * They are reentrant and a statement takes its whole closure up
+    * front, so a nested view expansion only re-enters locks its thread
+    * already holds and two statements cannot wait on each other. */
+  private def withNameLocks[T](s: SparkSession, names: Set[String])(body: => T): T = {
+    val locks = names.toSeq.sorted.map(n =>
+      nameLocks.of(s).getOrElseUpdate(n, new java.util.concurrent.locks.ReentrantLock))
+    locks.foreach(_.lock())
+    try body
+    finally locks.reverseIterator.foreach(_.unlock())
   }
 
   /** Metadata-only COUNT(*): `SELECT count(*) [AS a] FROM t` answered
