@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * no window, even when the group key is a constant-cardinality column.
   *
   * The only collect is the (group, bin) histogram (bounded by |g| ×
-  * bins, and capped at `maxBins` rows); the per-group counts are
+  * bins, and capped at [[MaxHistogramRows]]); the per-group counts are
   * derived from it in the driver.
   * Ordering is (score DESC, tie ASC); `tie` must be row-unique within a
   * group so the boundary row — and therefore every tie-crossing tile
@@ -45,17 +45,17 @@ import org.apache.spark.sql.functions._
   * driver maps here do not model that).
   *
   * @param binScale histogram granularity: bin = floor(score * binScale).
-  *        Pick so (score range × binScale) stays ≤ ~10⁴ per group.
-  * @param maxBins most (group, bin) histogram rows the driver collects;
-  *        a histogram larger than that fails loudly instead of
+  *        Pick so (score range × binScale) stays ≤ ~10⁴ per group;
+  *        a histogram past [[MaxHistogramRows]] fails loudly instead of
   *        collecting one row per distinct score.
   */
 object ExactNtile {
 
   private case class Boundary(g: String, bin: Long, residual: Long, rankIdx: Int)
 
-  /** Default histogram cap: ~10⁴ bins for each of 100 groups. */
-  val DefaultMaxBins: Int = 1000000
+  /** Most (group, bin) histogram rows the driver collects: ~10⁴ bins
+    * for each of 100 groups. */
+  private[graft] val MaxHistogramRows: Int = 1000000
 
   /** Driver-side boundary location: ONE histogram pass (the shuffled
     * (group, bin) agg, collected — bounded by groups × bins), from
@@ -66,7 +66,7 @@ object ExactNtile {
     * rank edges. */
   private def boundarySpecs(
       df: DataFrame, group: String, score: String, tie: String,
-      tiles: Int, binScale: Double, maxBins: Int): (DataFrame, Seq[Boundary]) = {
+      tiles: Int, binScale: Double): (DataFrame, Seq[Boundary]) = {
     val spark = df.sparkSession
     import spark.implicits._
     val binned = df
@@ -74,9 +74,9 @@ object ExactNtile {
       .withColumn("_bin", floor(col(score) * lit(binScale)).cast("long"))
 
     val histRows = binned.groupBy(col("_g"), col("_bin")).count()
-      .limit(maxBins + 1).as[(String, Long, Long)].collect()
-    require(histRows.length <= maxBins,
-      s"ExactNtile: the ($group, bin) histogram of $score has more than $maxBins rows " +
+      .limit(MaxHistogramRows + 1).as[(String, Long, Long)].collect()
+    require(histRows.length <= MaxHistogramRows,
+      s"ExactNtile: the ($group, bin) histogram of $score has more than $MaxHistogramRows rows " +
         s"at binScale $binScale; pick binScale so that (score range × binScale) " +
         "stays ≤ ~10⁴ per group")
     val hist: Map[String, Seq[(Long, Long)]] =
@@ -116,10 +116,10 @@ object ExactNtile {
     * broadcast joins; the native group column rides along. */
   private def boundaryFrame(
       df: DataFrame, group: String, score: String, tie: String,
-      tiles: Int, binScale: Double, maxBins: Int): Option[DataFrame] = {
+      tiles: Int, binScale: Double): Option[DataFrame] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (binned, bnds) = boundarySpecs(df, group, score, tie, tiles, binScale, maxBins)
+    val (binned, bnds) = boundarySpecs(df, group, score, tie, tiles, binScale)
     if (bnds.isEmpty) return None
 
     // (3) refine: rank ONLY the boundary-bin rows. The window partitions
@@ -150,9 +150,9 @@ object ExactNtile {
     * edge). No window over a group-keyed partition anywhere. */
   def boundaries(
       df: DataFrame, group: String, score: String, tie: String,
-      tiles: Int, binScale: Double = 1024.0, maxBins: Int = DefaultMaxBins): DataFrame = {
+      tiles: Int, binScale: Double = 1024.0): DataFrame = {
     require(tiles >= 1, s"tiles must be >= 1, got $tiles")
-    boundaryFrame(df, group, score, tie, tiles, binScale, maxBins) match {
+    boundaryFrame(df, group, score, tie, tiles, binScale) match {
       case Some(bf) =>
         bf.select(col(group), col("_j").as("boundary_idx"),
           col("_s").as("b_score"), col("_t").as("b_tie"))
@@ -169,13 +169,12 @@ object ExactNtile {
       tie: String,
       tiles: Int,
       tileCol: String = "tile",
-      binScale: Double = 1024.0,
-      maxBins: Int = DefaultMaxBins): DataFrame = {
+      binScale: Double = 1024.0): DataFrame = {
     require(tiles >= 1, s"tiles must be >= 1, got $tiles")
     if (!df.sparkSession.conf.getOption("spark.graft.ntile.fused").contains("false"))
-      return withTileFused(df, group, score, tie, tiles, tileCol, binScale, maxBins)
+      return withTileFused(df, group, score, tie, tiles, tileCol, binScale)
     val binned = df.withColumn("_g", col(group).cast("string"))
-    boundaryFrame(df, group, score, tie, tiles, binScale, maxBins) match {
+    boundaryFrame(df, group, score, tie, tiles, binScale) match {
       case None => binned.drop("_g").withColumn(tileCol, lit(1))
       case Some(bf) =>
         // (4) assign: tile = 1 + #boundaries the row falls strictly
@@ -221,10 +220,10 @@ object ExactNtile {
     * Opt out (the r16 spelling) with spark.graft.ntile.fused=false. */
   private def withTileFused(
       df: DataFrame, group: String, score: String, tie: String,
-      tiles: Int, tileCol: String, binScale: Double, maxBins: Int): DataFrame = {
+      tiles: Int, tileCol: String, binScale: Double): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (binned, bnds) = boundarySpecs(df, group, score, tie, tiles, binScale, maxBins)
+    val (binned, bnds) = boundarySpecs(df, group, score, tie, tiles, binScale)
     val outCols = (df.columns.toSeq :+ tileCol).map(col)
     if (bnds.isEmpty)
       return binned.drop("_g", "_bin").withColumn(tileCol, lit(1))

@@ -26,7 +26,12 @@ class CheckpointsSpec extends SparkSuite {
     val dir = graft.tables.TmpDirs.create("graft-reliable-ckpt")
     s.conf.set("spark.graft.checkpoint.reliableDir", dir.toString)
     try {
-      val reliableRows = GraftSql.sql(s, rcte).collect().map(_.getInt(0)).sorted
+      // `reliable` stays reachable until after the walk: its plan holds
+      // the checkpointed frontiers, and the context cleaner
+      // (cleanCheckpoints=true) deletes an RDD's files once it is
+      // garbage collected.
+      val reliable = GraftSql.sql(s, rcte)
+      val reliableRows = reliable.collect().map(_.getInt(0)).sorted
       assert(reliableRows.sameElements(localRows))
       // The cut really went through the reliable path: files landed.
       val s2 = java.nio.file.Files.walk(dir)
@@ -34,6 +39,7 @@ class CheckpointsSpec extends SparkSuite {
         try s2.filter(java.nio.file.Files.isRegularFile(_)).count()
         finally s2.close()
       assert(nFiles > 0, s"no reliable checkpoint files under $dir")
+      assert(reliable.columns.toSeq == Seq("n"))
     } finally s.conf.unset("spark.graft.checkpoint.reliableDir")
   }
 

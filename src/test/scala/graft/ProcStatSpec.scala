@@ -4,10 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench's contention sampler tells kernel threads from user
   * processes by the PF_KTHREAD bit of `/proc/<pid>/stat`, never by the
-  * command name, which any process can set. */
+  * command name alone, which any process can set; of the kernel threads
+  * only the kworkers leave its breach signal. */
 class ProcStatSpec extends AnyFunSuite {
 
-  import Bench.{ProcStat, parseProcStat}
+  import Bench.{ProcStat, isKworker, parseProcStat}
 
   /** A stat line with the given name, flags and utime/stime; the other
     * fields as a Linux 6.x kernel writes them. */
@@ -26,6 +27,17 @@ class ProcStatSpec extends AnyFunSuite {
   test("a user process that names itself kworker/0:1 is not a kernel thread") {
     assert(parseProcStat(line(4242, "kworker/0:1", 4194304L, 150, 25)) ==
       Some(ProcStat("kworker/0:1", kernelThread = false, 175)))
+  }
+
+  test("only kernel threads named kworker leave the breach signal") {
+    val kworker = parseProcStat(line(45, "kworker/0:2-events", 69238880L, 7, 30)).get
+    val kcompactd = parseProcStat(line(38, "kcompactd0", 2129984L, 90, 400)).get
+    val kswapd = parseProcStat(line(37, "kswapd0", 2129984L, 5, 900)).get
+    val userKworker = parseProcStat(line(4242, "kworker/0:1", 4194304L, 150, 25)).get
+    assert(isKworker(kworker))
+    assert(kcompactd.kernelThread && !isKworker(kcompactd))
+    assert(kswapd.kernelThread && !isKworker(kswapd))
+    assert(!isKworker(userKworker))
   }
 
   test("a name with spaces and ')' does not shift the fields") {
