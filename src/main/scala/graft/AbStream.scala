@@ -11,13 +11,11 @@ package graft
   * a fixed-work fsync probe around every sample so an IO-throttle
   * episode is visible next to the number it contaminated.
   *
-  * Usage: runMain graft.AbStream <v2s|v2> <rounds> key=valA|valB [key2=...]
-  *   - v2s: stages the JSON inputs ONCE, then per sample replays the
-  *     file-source → parse → transformWithState(RocksDB) → parquet-sink
-  *     stream into fresh out/checkpoint dirs (deleted after each
-  *     sample) — the replay constant in isolation.
-  *   - v2: per sample re-runs the batch transformWithState over the
-  *     memoized envelope through the noop sink (guide §1.4).
+  * Usage: runMain graft.AbStream <streamed|query:name|sqlfile:path> <rounds> key=valA|valB [key2=...]
+  *   - streamed: stages the JSON inputs ONCE, then per sample replays
+  *     the file-source → parse → flatMapGroupsWithState(RocksDB) →
+  *     parquet-sink ingest stream into fresh out/checkpoint dirs
+  *     (deleted after each sample) — the replay constant in isolation.
   * Sink row counts are asserted identical across every sample — a conf
   * that changed results would abort the A/B, not report a speedup.
   */
@@ -44,7 +42,8 @@ object AbStream {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: AbStream <v2s|v2> <rounds> key=valA|valB ...")
+    require(args.length >= 3,
+      "usage: AbStream <streamed|query:name|sqlfile:path> <rounds> key=valA|valB ...")
     val mode = args(0)
     val rounds = args(1).toInt
     val flips: Seq[(String, (String, String))] = args.drop(2).toSeq.map { spec =>
@@ -64,15 +63,15 @@ object AbStream {
 
     // ---- per-mode sample runners ------------------------------------
     var expectRows = -1L
-    val v2sBase = graft.tables.TmpDirs.create("graft-ab-v2s")
-    lazy val v2sDirs = CdcPipeline.stageV2sInputs(spark, sfDir, v2sBase)
+    val streamedBase = graft.tables.TmpDirs.create("graft-ab-streamed")
+    lazy val streamedDirs = CdcPipeline.stageStreamedInputs(spark, sfDir, streamedBase)
     var seq = 0
-    def sampleV2s(): Double = {
+    def sampleStreamed(): Double = {
       seq += 1
-      val out = v2sBase.resolve(s"out$seq").toString
-      val cp = v2sBase.resolve(s"cp$seq").toString
+      val out = streamedBase.resolve(s"out$seq").toString
+      val cp = streamedBase.resolve(s"cp$seq").toString
       val t0 = System.nanoTime()
-      CdcPipeline.runV2sStream(spark, v2sDirs, out, cp)
+      CdcPipeline.runStreamed(spark, streamedDirs, out, cp)
       val sec = (System.nanoTime() - t0) / 1e9
       val rows = spark.read.parquet(out).count()
       if (expectRows < 0) expectRows = rows
@@ -83,18 +82,8 @@ object AbStream {
       }
       sec
     }
-    def sampleV2(): Double = {
-      org.apache.spark.sql.graft.StateInit.ensureStateStoreCoordinator(spark)
-      val df = graft.buffering.TxBufferV2(
-        CdcPipeline.unifiedCached(spark, sfDir), () => CdcPipeline.FixedTs).toDF()
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      sec
-    }
     val sample: () => Double = mode match {
-      case "v2s" => () => sampleV2s()
-      case "v2"  => () => sampleV2()
+      case "streamed" => () => sampleStreamed()
       // query:<declared name>: time the declared query's count() (the
       // bench's timed action) under the flipped confs — the generic
       // arm for any conf-gated query-path A/B.

@@ -494,8 +494,7 @@ object Bench {
     val builds: Seq[(String, () => Unit)] = Seq(
       "build_cdc_envelope" -> (() => { CdcPipeline.unifiedCached(spark, sfDir); () }),
       "build_order_stream" -> (() => { CdcPipeline.orderStreamCached(spark, sfDir); () }),
-      "build_order_stream_v2" -> (() => { CdcPipeline.orderStreamV2Cached(spark, sfDir); () }),
-      "build_order_stream_v2s" -> (() => { CdcPipeline.orderStreamV2StreamedCached(spark, sfDir); () }),
+      "build_order_stream_streamed" -> (() => { CdcPipeline.orderStreamStreamedCached(spark, sfDir); () }),
       "build_orders_current" -> (() => { graft.scd.ScdPipeline.ordersCurrent(spark, sfDir); () }),
       "build_storage_tables" -> (() => graft.queries.StorageQueries.ensureSeeded(spark, sfDir)),
       "build_partitioned_events" -> (() => graft.queries.EventsQueries.ensureSeeded(spark, sfDir)),

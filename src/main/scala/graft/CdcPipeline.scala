@@ -6,6 +6,7 @@ import graft.buffering.TxBuffer
 import graft.cdcgen.CdcEventGen
 import graft.envelope.Envelope
 import graft.model.OrderStreamRow
+import graft.streaming.CdcStreaming
 
 /** End-to-end CDC pipeline 1: value-string streams → parse → union →
   * stateful transaction buffering → denormalized `order_stream` rows
@@ -88,69 +89,27 @@ object CdcPipeline {
       df
     })
 
-  private val cacheV2 =
+  private val streamedCache =
     new graft.tables.SessionMemo[String, DataFrame]
 
-  /** The same order_stream computed by the state-v2 buffer
-    * (`transformWithState`, [[graft.buffering.TxBufferV2]]) — memoized
-    * separately so the hash-gated v1/v2 equivalence query measures only
-    * itself in the bench (`build_order_stream_v2`).
-    *
-    * DEFAULT DECISION (recorded): v1 (`flatMapGroupsWithState`,
-    * [[TxBuffer]]) remains the engine default for `orderStream`; v2 is
-    * the recommended spelling where its timer contract matters. Why:
-    * (1) v1's batch mode is pure public API, while batch
-    * `transformWithState` needs the `StateInit` shim to stand up the
-    * StateStoreCoordinator — the default path should not depend on a
-    * `private[sql]` seam; (2) v1 benches consistently faster in this
-    * single-JVM harness (build_order_stream vs build_order_stream_v2:
-    * the v2 RocksDB provider pays per-key column-family overhead in
-    * batch); (3) both spellings are now hash-gated against the same
-    * DuckDB oracle in BOTH modes — batch (`cdc_order_stream_flat_v2`)
-    * and real streaming (`cdc_order_stream_flat_v2_streamed`) — so the
-    * choice is operational, not correctness. Pick v2 when TTL must fire
-    * without traffic (explicit timers, TxBufferV2Spec) or when state
-    * schema evolution / multiple state variables are needed. */
-  def orderStreamV2Cached(spark: SparkSession, sfDir: String): DataFrame =
-    cacheV2.getOrElseUpdate(spark, sfDir)({
-      // Batch transformWithState needs the StateStoreCoordinator driver
-      // endpoint that only streaming startup normally registers.
-      org.apache.spark.sql.graft.StateInit.ensureStateStoreCoordinator(spark)
-      val df = graft.buffering.TxBufferV2(unifiedCached(spark, sfDir), () => FixedTs)
-        .toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      // Every consumer reads the persisted blocks from here on; the 32
-      // RocksDB providers the batch run loaded would otherwise stay
-      // registered — instances open, maintenance thread snapshotting
-      // ephemeral state — for the rest of the session (r17: measured
-      // as a monotone 4.9→22 s drift across repeated replays before
-      // the unload was added to the A/B harness).
-      org.apache.spark.sql.graft.StateInit.unloadAllStateStores()
-      df
-    })
-
-  private val cacheV2Streamed =
-    new graft.tables.SessionMemo[String, DataFrame]
-
-  /** order_stream computed by TxBufferV2 running as a REAL STREAM — the
-    * reference's actual operating mode, end to end: the four CDC value
-    * streams are staged once as JSON-line text files, read back through
-    * the file source (`CdcStreaming.fileValueStream`), parsed + unioned
-    * + buffered by `transformWithState` in STREAMING mode (RocksDB
-    * state store, checkpointed), and sunk to parquet under
+  /** order_stream computed as a REAL STREAM — the reference's actual
+    * operating mode, end to end: the four CDC value streams are staged
+    * once as JSON-line text files, then [[CdcStreaming.startIngest]]
+    * reads them back through the file source, parses, unions and
+    * buffers them with [[TxBuffer]] in STREAMING mode (RocksDB state
+    * store, checkpointed), and sinks them to parquet under
     * `Trigger.AvailableNow`. Always the full JSON render+parse path —
     * the bench fast lane does not apply, because what this entry
     * measures IS the streaming ingest. Emissions are batch-identical
     * (the per-key fold is arrival-order-insensitive and a transaction
     * split across microbatches completes in the later one), which the
     * shared DuckDB oracle then hash-gates. */
-  def orderStreamV2StreamedCached(spark: SparkSession, sfDir: String): DataFrame =
-    cacheV2Streamed.getOrElseUpdate(spark, sfDir)({
-      val base = graft.tables.TmpDirs.create("graft-v2s")
-      val dirs = stageV2sInputs(spark, sfDir, base)
+  def orderStreamStreamedCached(spark: SparkSession, sfDir: String): DataFrame =
+    streamedCache.getOrElseUpdate(spark, sfDir)({
+      val base = graft.tables.TmpDirs.create("graft-streamed")
+      val dirs = stageStreamedInputs(spark, sfDir, base)
       val out = base.resolve("out").toString
-      runV2sStream(spark, dirs, out, base.resolve("cp").toString)
+      runStreamed(spark, dirs, out, base.resolve("cp").toString)
       // The staging JSON and the checkpoint are DEAD once the sink
       // parquet exists — the cached frame's lineage reads only `out`.
       // Left behind, each bench/verify run parked ~4 GB of dead files
@@ -161,7 +120,7 @@ object CdcPipeline {
         try graft.tables.ValueIndex.deleteTree(java.nio.file.Paths.get(d))
         catch { case scala.util.control.NonFatal(_) => () }
       }
-      // The terminated query's 32 RocksDB providers stay registered
+      // The terminated query's RocksDB providers stay registered
       // until the next maintenance tick (60 s) and would snapshot
       // against the checkpoint dir just deleted above — unload them
       // with the staging, not eventually (the in-memory sibling of the
@@ -173,11 +132,11 @@ object CdcPipeline {
       df
     })
 
-  /** v2s staging step: render the four CDC value streams as JSON-line
-    * text dirs under `base` (the file-source input). Split out so the
-    * A/B harness ([[AbStream]]) can stage once and time only the
-    * stream replay. */
-  private[graft] def stageV2sInputs(
+  /** Streamed-build staging step: render the four CDC value streams as
+    * JSON-line text dirs under `base` (the file-source input). Split
+    * out so the A/B harness ([[AbStream]]) can stage once and time only
+    * the stream replay. */
+  private[graft] def stageStreamedInputs(
       spark: SparkSession, sfDir: String, base: java.nio.file.Path): Seq[String] = {
     val srcs = CdcEventGen.fromTpch(spark, sfDir)
     // Four independent render+write jobs overlapped per guide §2.6:
@@ -195,26 +154,10 @@ object CdcPipeline {
     }
   }
 
-  /** v2s replay step: file source → parse/union → transformWithState
-    * (RocksDB state store, checkpointed) → parquet sink, run to
-    * completion under Trigger.AvailableNow. */
-  private[graft] def runV2sStream(
-      spark: SparkSession, dirs: Seq[String], out: String, cp: String): Unit = {
-    import graft.streaming.CdcStreaming
-    val streamed = unified(
-      CdcStreaming.fileValueStream(spark, dirs(0)),
-      CdcStreaming.fileValueStream(spark, dirs(1)),
-      CdcStreaming.fileValueStream(spark, dirs(2)),
-      CdcStreaming.fileValueStream(spark, dirs(3)))
-    val q = graft.buffering.TxBufferV2(streamed, () => FixedTs)
-      .toDF()
-      .writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", cp)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  /** Streamed-build replay step: the ingest query over the staged dirs,
+    * run to completion under Trigger.AvailableNow. */
+  private[graft] def runStreamed(
+      spark: SparkSession, dirs: Seq[String], out: String, cp: String): Unit =
+    CdcStreaming.startIngest(spark, dirs(0), dirs(1), dirs(2), dirs(3), out, cp)
+      .awaitTermination()
 }

@@ -31,26 +31,27 @@ object SparkSessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // RocksDB state store, as the reference runs it (reference.conf:14).
-      // Required by the state-v2 operators (transformWithState needs a
-      // provider with column-family support — the HDFS-backed default
-      // throws CANNOT_LOAD_STATE_STORE, in batch mode too); v1 batch
-      // paths never open a store, so this only enables, never changes.
+      // RocksDB state store, as the reference runs it (reference.conf:14):
+      // the streaming transaction buffer (flatMapGroupsWithState in
+      // CdcStreaming.startIngest and the streamed order_stream build)
+      // keeps its per-transaction state there. Batch buffering never
+      // opens a store, so this only affects streaming queries.
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // The 4.1 checkpoint checksum writer deadlocks under RocksDB
       // snapshot upload with several state partitions closing zip
-      // streams at once — harmless to disable for local checkpoints
-      // (see SparkTestBase for the full account).
+      // streams at once: each close() awaits a checksum future that
+      // can't get a pool thread, and the state commit wedges. Checksums
+      // add nothing to local checkpoints, so the feature is off.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       // Row-count tracking does a RocksDB get() before every put()/
       // delete() purely to maintain the numTotalStateRows metric, which
       // nothing in this engine reads — on the update-heavy transaction
       // buffer that is one extra point lookup per event. Measured (r17
-      // within-JVM alternating A/B, 4-5 rounds each): 0.90× on the v2s
-      // replay, 0.94× on the batch v2 build. Scale-independent: the
-      // saved work grows with event count. Re-enable per session when
-      // the metric is wanted.
+      // within-JVM alternating A/B, 4-5 rounds each, on the since-removed
+      // state-v2 buffer): 0.90× on its streamed replay, 0.94× on its
+      // batch build. Scale-independent: the saved work grows with event
+      // count. Re-enable per session when the metric is wanted.
       .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
       // Generated-class cache (static; read once, when the JVM first
       // touches CodeGenerator). Spark's default of 100 is a Guava cache

@@ -472,13 +472,8 @@ object Dedup {
     // subtree — the degree aggregation and its two joins ran twice
     // each (§1.2). Cut it once: the materialized rows are two BIGINTs
     // per edge (no wide payload, unlike the prefix-join case), so the
-    // cut is cheap at any size. spark.graft.triangles.shareOriented=
-    // false restores the inline spelling (the A/B lever).
-    val oriented =
-      if (edges.sparkSession.conf
-          .getOption("spark.graft.triangles.shareOriented").contains("false"))
-        orientedPlan
-      else graft.tables.Checkpoints.cut(orientedPlan)
+    // cut is cheap at any size (r17 A/B: 52 → 16 exchanges).
+    val oriented = graft.tables.Checkpoints.cut(orientedPlan)
     val wedges = oriented.alias("x").join(
         oriented.alias("y"),
         col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))

@@ -21,9 +21,9 @@ object CdcQueries extends QueryModule {
 
   /** The flagship flatten of an order_stream frame — one row per
     * emitted (transaction × order), scalars via try_element_at
-    * (R17/Q7), size (Q7) and aggregate HOF (Q8). Shared by the v1,
-    * v2-batch and v2-streamed gates, which must all hash-match the
-    * same [[flatOracle]]. */
+    * (R17/Q7), size (Q7) and aggregate HOF (Q8). Shared by the batch
+    * and streamed gates, which must both hash-match the same
+    * [[flatOracle]]. */
   private def flatten(df: org.apache.spark.sql.DataFrame) = df.selectExpr(
     "xid",
     "orderId",
@@ -79,32 +79,20 @@ object CdcQueries extends QueryModule {
 
   override def queries: Seq[EngineQuery] = Seq(
 
-    // Flagship: the v1 (flatMapGroupsWithState) batch spelling.
+    // Flagship: the flatMapGroupsWithState buffer in batch mode.
     EngineQuery(
       "cdc_order_stream_flat",
       (s, dir) => flatten(CdcPipeline.orderStreamCached(s, dir)),
       flatOracle),
 
-    // The SAME flagship flatten computed by the state-v2 buffer
-    // (`transformWithState` + named ValueState, TxBufferV2) against the
-    // SAME DuckDB oracle — hash-gating the Spark-4-native spelling of
-    // R6/R7 to byte-identical emissions with the v1
-    // flatMapGroupsWithState path (which stays the default —
-    // CdcPipeline.orderStreamV2Cached records the decision).
-    EngineQuery(
-      "cdc_order_stream_flat_v2",
-      (s, dir) => flatten(CdcPipeline.orderStreamV2Cached(s, dir)),
-      flatOracle),
-
-    // The v2 buffer in its REAL operating mode: a streaming query over
-    // file sources (JSON-line values → parse → union →
-    // transformWithState on RocksDB → checkpointed parquet sink,
+    // The same buffer in its REAL operating mode: a streaming query
+    // over file sources (JSON-line values → parse → union →
+    // flatMapGroupsWithState on RocksDB → checkpointed parquet sink,
     // Trigger.AvailableNow) — the full reference pipeline shape,
-    // hash-gated against the SAME oracle. Closes the gap where the
-    // streaming spelling was spec-only while batch carried the oracle.
+    // hash-gated against the SAME oracle.
     EngineQuery(
-      "cdc_order_stream_flat_v2_streamed",
-      (s, dir) => flatten(CdcPipeline.orderStreamV2StreamedCached(s, dir)),
+      "cdc_order_stream_flat_streamed",
+      (s, dir) => flatten(CdcPipeline.orderStreamStreamedCached(s, dir)),
       flatOracle),
 
     // The unified envelope surface alone (R1-R5): event counts per type

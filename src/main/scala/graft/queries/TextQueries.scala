@@ -1793,62 +1793,27 @@ object TextQueries extends QueryModule {
         // The codegen'd tokenize over a column-pruned parquet scan is
         // the CHEAP stage here; the double pass is the measured
         // optimum on page-cached local storage. On a remote-storage
-        // 100 TB corpus the balance can flip — the count-first
-        // variant (BASELINE.md r16) is the drop-in for that regime.
+        // 100 TB corpus the balance can flip, and the count-first
+        // variant (BASELINE.md r16) would be worth measuring there.
         val e = docs(s, dir).withColumn("toks", expr(toksSpark))
           .selectExpr("doc_id", "lang", s"${splitSpark("doc_id")} AS split",
             "explode(toks) AS tok")
-        // Remote-storage dispatch (the BASELINE.md r16 variant-C note
-        // made mechanical): `spark.graft.nb.countFirst=true` swaps in
-        // the count-first spelling — ONE tokenize pass reduced to
-        // persisted per-(doc, token) counts that feed both the vocab
-        // pass and the apply probe, releasing via CacheRelease after
-        // the caller's first materialization. Measured SLOWER on this
-        // harness (page-cached local parquet: sf1 15.2 s vs 14.8, the
-        // pair shuffle + cache outweigh the rescan it saves) so the
-        // default stays the double-tokenize spelling; on a
-        // remote-storage corpus where a second 100 TB read is the
-        // expensive side the conf is the drop-in. The algebra is
-        // integer-identical (cnt-weighted sums = instance counts), so
-        // both arms share this oracle — TextNbCountFirstSpec pins
-        // bit-equality and the cache release.
-        val countFirst =
-          s.conf.getOption("spark.graft.nb.countFirst").exists(_.toBoolean)
-        val (ef, release) =
-          if (countFirst) {
-            val tc = e.groupBy("doc_id", "lang", "split", "tok")
-              .agg(count(lit(1)).cast("long").as("cnt"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            // (doc_id, tok) is unique in tc — lang/split are
-            // functions of doc_id — so df = train row count per tok.
-            val vocab = tc.where(col("split") === "train")
-              .groupBy("tok").agg(count(lit(1)).as("df"))
-              .filter(col("df") >= dfFloor)
-              .selectExpr("tok", s"${hash60Spark("tok")} % $B AS f")
-            (tc.join(vocab, Seq("tok"), "left")
-              .selectExpr("doc_id", "lang", "split",
-                s"coalesce(f, CAST($B AS BIGINT)) AS f", "cnt"),
-              Some(() => { tc.unpersist(); () }))
-          } else {
-            val vocab = e.where(col("split") === "train")
-              .select("tok", "doc_id").distinct()
-              .groupBy("tok").agg(count(lit(1)).as("df"))
-              .filter(col("df") >= dfFloor)
-              .selectExpr("tok", s"${hash60Spark("tok")} % $B AS f")
-            // No broadcast HINT on the head-vocab probe: AQE picks the
-            // join strategy from the vocab's ACTUAL runtime size —
-            // broadcast at every sane floor (the hash-probe fast
-            // path), degrading to a shuffle join only when df >= floor
-            // still leaves a vocab no JVM should hold whole (the
-            // documented 100 TB fallback, mechanical instead of prose
-            // — same dispatch philosophy as the centroid broadcast
-            // bound).
-            (e.join(vocab, Seq("tok"), "left")
-              .selectExpr("doc_id", "lang", "split",
-                s"coalesce(f, CAST($B AS BIGINT)) AS f",
-                "CAST(1 AS BIGINT) AS cnt"),
-              None)
-          }
+        val vocab = e.where(col("split") === "train")
+          .select("tok", "doc_id").distinct()
+          .groupBy("tok").agg(count(lit(1)).as("df"))
+          .filter(col("df") >= dfFloor)
+          .selectExpr("tok", s"${hash60Spark("tok")} % $B AS f")
+        // No broadcast HINT on the head-vocab probe: AQE picks the
+        // join strategy from the vocab's ACTUAL runtime size —
+        // broadcast at every sane floor (the hash-probe fast path),
+        // degrading to a shuffle join only when df >= floor still
+        // leaves a vocab no JVM should hold whole (the documented
+        // 100 TB fallback, mechanical instead of prose — same dispatch
+        // philosophy as the centroid broadcast bound).
+        val ef = e.join(vocab, Seq("tok"), "left")
+          .selectExpr("doc_id", "lang", "split",
+            s"coalesce(f, CAST($B AS BIGINT)) AS f",
+            "CAST(1 AS BIGINT) AS cnt")
         val cntCols = langs.map(l =>
           sum(when(col("lang") === l, col("cnt")).otherwise(0L)).as(s"c_$l"))
         val cnt = ef.where(col("split") === "train").groupBy("f")
@@ -1869,7 +1834,7 @@ object TextQueries extends QueryModule {
         val scored = docF.join(broadcast(weights), "f")
           .groupBy("doc_id", "lang")
           .agg(scoreAggs.head, scoreAggs.tail: _*)
-        val out = scored.selectExpr("lang",
+        scored.selectExpr("lang",
             """CASE WHEN sc_en >= greatest(sc_es, sc_de, sc_fr, sc_zh) THEN 'en'
               |     WHEN sc_es >= greatest(sc_de, sc_fr, sc_zh) THEN 'es'
               |     WHEN sc_de >= greatest(sc_fr, sc_zh) THEN 'de'
@@ -1877,8 +1842,6 @@ object TextQueries extends QueryModule {
               |     ELSE 'zh' END AS predicted""".stripMargin.replace("\n", " "))
           .groupBy("lang", "predicted")
           .agg(count(lit(1)).cast("long").as("n_docs"))
-        release.fold(out)(r =>
-          graft.plans.CacheRelease.afterFirstMaterialization(s, out, r))
       },
       Some {
         val B = 64

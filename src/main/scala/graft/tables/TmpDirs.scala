@@ -14,7 +14,8 @@ import scala.util.control.NonFatal
   * alone leaves them behind forever. The r16 sf1 bench adjudication
   * traced a 106× per-entry anomaly to exactly this: ~60 GB of dead
   * staging accumulated across runs was degrading the box's IO before
-  * any code ran (BASELINE.md r16). The v2s build got a targeted fix;
+  * any code ran (BASELINE.md r16). The streamed order_stream build got
+  * a targeted fix;
   * this helper closes the remaining ~45 call sites mechanically.
   *
   * Mechanism, two halves:

@@ -1,68 +1,17 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Driver-side bootstrap for BATCH `transformWithState`.
-  *
-  * The state-v2 physical operator (`TransformWithStateExec`) loads its
-  * RocksDB stores through the `StateStoreCoordinator` driver RPC
-  * endpoint — which only STREAMING query startup normally registers.
-  * A batch query that reaches the operator first therefore dies with
-  * `RpcEndpointNotFoundException: Cannot find endpoint:
-  * spark://StateStoreCoordinator@...` from every task.
-  *
-  * The coordinator ref hangs off the session's
-  * `StreamingQueryManager.stateStoreCoordinator` (a lazy val that
-  * creates the endpoint on first touch); both members are
-  * `private[sql]`, hence this shim lives under `org.apache.spark.sql`.
-  * Touching it is idempotent and costs one no-op RPC registration.
-  *
-  * Because the shim reaches into `private[sql]` internals, a Spark
-  * minor bump can break it SILENTLY (the lazy val moves / the classic
-  * session type changes) — without the wrap below that surfaces as
-  * `RpcEndpointNotFoundException` from every task with no hint of the
-  * cause. Any failure of the touch is re-thrown as a loud, versioned
-  * error naming this file and the fallback (StateInitSpec pins the
-  * message).
-  */
+/** State-store lifecycle hook that needs `private[sql]` access, hence
+  * this object lives under `org.apache.spark.sql`. */
 object StateInit {
-
-  /** The raw `private[sql]` touch — isolated so the error wrap is
-    * testable without simulating a Spark upgrade. */
-  private[graft] def coordinatorTouch(spark: SparkSession): Unit = {
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.streamingQueryManager.stateStoreCoordinator
-    ()
-  }
-
-  def ensureStateStoreCoordinator(
-      spark: SparkSession,
-      touch: SparkSession => Unit = coordinatorTouch): Unit =
-    try touch(spark)
-    catch {
-      // LinkageError (NoSuchMethodError / NoClassDefFoundError) is
-      // exactly what a binary-incompatible Spark bump throws — it must
-      // not escape as-is.
-      case e @ (_: LinkageError | _: RuntimeException | _: ClassCastException) =>
-        throw new IllegalStateException(
-          "graft StateInit: registering the StateStoreCoordinator via " +
-            "private[sql] internals failed on Spark " +
-            org.apache.spark.SPARK_VERSION + ". This shim " +
-            "(org/apache/spark/sql/graft/StateInit.scala) was written " +
-            "against Spark 4.1.x; batch transformWithState (TxBufferV2) " +
-            "needs the coordinator endpoint that only streaming startup " +
-            "registers. Re-pin the shim against this Spark version, or " +
-            "use the flatMapGroupsWithState path (TxBuffer v1) for batch.",
-          e)
-    }
 
   /** Unload every loaded state-store provider on this executor (local
     * mode: the JVM) — `StateStore.unloadAll()` is `private[sql]`, hence
-    * surfaced here. Measurement hygiene for the A/B harness
-    * ([[graft.AbStream]]): a terminated AvailableNow query leaves its
+    * surfaced here. A terminated AvailableNow query leaves its
     * providers (RocksDB instances + background maintenance) registered
-    * until the next maintenance tick, which otherwise overlaps the next
-    * timed sample. Never called on a query path. */
+    * until the next maintenance tick; the streamed build
+    * ([[graft.CdcPipeline.orderStreamStreamedCached]]) and the A/B
+    * harness ([[graft.AbStream]]) unload them once the query's output
+    * is persisted. Never called on a query path. */
   def unloadAllStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
 }

@@ -6,19 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session for the whole test JVM (Test/fork := true). */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    // RocksDB state store, as the reference runs it (reference.conf:14) —
-    // exercises the provider end-to-end in the streaming specs.
-    val s = SparkSessions.builder("local[8]", 8)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // The 4.1 checkpoint checksum writer deadlocks under RocksDB
-      // snapshot upload with several state partitions closing zip
-      // streams at once (each close() awaits a checksum future that
-      // can't get a pool thread). Observed wedging transformWithState
-      // commits in TxBufferV2Spec; checksums add nothing to local
-      // test checkpoints, so turn the feature off for the test JVM.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .getOrCreate()
+    val s = SparkSessions.builder("local[8]", 8).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
