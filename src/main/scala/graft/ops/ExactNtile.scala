@@ -162,41 +162,8 @@ object ExactNtile {
     }
   }
 
-  def withTile(
-      df: DataFrame,
-      group: String,
-      score: String,
-      tie: String,
-      tiles: Int,
-      tileCol: String = "tile",
-      binScale: Double = 1024.0): DataFrame = {
-    require(tiles >= 1, s"tiles must be >= 1, got $tiles")
-    if (!df.sparkSession.conf.getOption("spark.graft.ntile.fused").contains("false"))
-      return withTileFused(df, group, score, tie, tiles, tileCol, binScale)
-    val binned = df.withColumn("_g", col(group).cast("string"))
-    boundaryFrame(df, group, score, tie, tiles, binScale) match {
-      case None => binned.drop("_g").withColumn(tileCol, lit(1))
-      case Some(bf) =>
-        // (4) assign: tile = 1 + #boundaries the row falls strictly
-        // AFTER in (score DESC, tie ASC). One array per group,
-        // broadcast back; the corpus side does one hash probe + a fold
-        // over ≤ tiles-1 elements. No sort, no row multiplication.
-        val bndDf = bf
-          .groupBy(col("_g"))
-          .agg(collect_list(struct(col("_s").as("s"), col("_t").as("t"))).as("_bnds"))
-        binned.join(broadcast(bndDf), Seq("_g"), "left")
-          .withColumn(tileCol,
-            lit(1) + coalesce(expr(
-              s"""aggregate(_bnds, 0, (acc, b) ->
-                 |  acc + CASE WHEN CAST($score AS DOUBLE) < b.s
-                 |               OR (CAST($score AS DOUBLE) = b.s AND $tie > b.t)
-                 |          THEN 1 ELSE 0 END)""".stripMargin.replace("\n", " ")), lit(0)))
-          .drop("_g", "_bnds")
-    }
-  }
-
-  /** The r17 fused assignment (guide §1.2: the separate boundary-row
-    * refinement subtree folds into the assignment itself). Key fact:
+  /** Appends `tileCol`: the row's `ntile(tiles)` over (score DESC, tie
+    * ASC) within its group, assigned in one fused step. Key fact:
     * `bin = floor(score × binScale)` is monotone in score, so a row is
     * strictly after boundary j (rank K_j, in bin b_j at within-bin
     * residual r_j) iff its bin is LOWER than b_j, or equal and its
@@ -210,17 +177,19 @@ object ExactNtile {
     * boundary ROW ever computed or joined. Boundary-bin rows (a
     * binScale-thin sliver) get their within-bin rank from the same
     * (group, bin)-partitioned window the old refinement used — but its
-    * output is now the final tile directly, instead of boundary rows
-    * joined back against the full corpus. vs the old spelling: the
-    * `wanted` join, the collect_list, and the corpus-wide broadcast
-    * join of struct arrays (with per-row double-cast + tie compares)
-    * all disappear; the exactness contract (score DESC, tie ASC total
-    * order, ntile edge rule) is byte-identical — pinned by
-    * ExactNtileSpec's window-parity fixtures and the oracle row.
-    * Opt out (the r16 spelling) with spark.graft.ntile.fused=false. */
-  private def withTileFused(
-      df: DataFrame, group: String, score: String, tie: String,
-      tiles: Int, tileCol: String, binScale: Double): DataFrame = {
+    * output is the final tile directly, never boundary rows joined
+    * back against the full corpus. The exactness contract (score DESC,
+    * tie ASC total order, ntile edge rule) is pinned by ExactNtileSpec's
+    * window-parity fixtures and the oracle row. */
+  def withTile(
+      df: DataFrame,
+      group: String,
+      score: String,
+      tie: String,
+      tiles: Int,
+      tileCol: String = "tile",
+      binScale: Double = 1024.0): DataFrame = {
+    require(tiles >= 1, s"tiles must be >= 1, got $tiles")
     val spark = df.sparkSession
     import spark.implicits._
     val (binned, bnds) = boundarySpecs(df, group, score, tie, tiles, binScale)

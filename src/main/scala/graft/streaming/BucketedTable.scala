@@ -1,38 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.scd.MergeExecutor
-
-/** Shared snapshot-version naming: zero-padded monotonic ids, parsed and
-  * ordered numerically (immune to digit-count differences between naming
-  * epochs). One definition for ParquetTable and BucketedTable — the two
-  * must never disagree on what a version dir is called. */
-private[graft] object VersionNames {
-  def isVersionDir(name: String): Boolean =
-    name.startsWith("v") && name.length > 1 && name.drop(1).forall(_.isDigit)
-  def idOf(name: String): Long = name.drop(1).toLong
-  def format(id: Long): String = f"v$id%020d"
-
-  /** Direct child names of `dir` (empty if absent) — closes the stream. */
-  def childNames(dir: java.nio.file.Path): Seq[String] = {
-    if (!Files.exists(dir)) return Seq.empty
-    val s = Files.list(dir)
-    try s.iterator().asScala.map(_.getFileName.toString).toSeq
-    finally s.close()
-  }
-
-  /** Recursive delete — closes the walk stream. */
-  def deleteTree(root: java.nio.file.Path): Unit = {
-    val s = Files.walk(root)
-    val paths = try s.iterator().asScala.toSeq finally s.close()
-    paths.reverse.foreach(Files.deleteIfExists(_))
-  }
-}
 
 /** Hash-bucketed snapshot table: the 100 TB answer to "no Delta means the
   * merge rewrites the whole table".
@@ -65,12 +39,9 @@ object BucketedTable {
       .map { line => val Array(b, v) = line.split(":", 2); b.toInt -> v }
       .toMap
 
-  private def writeManifest(dir: String, m: Map[Int, String]): Unit = {
-    val tmp = Paths.get(dir, "_MANIFEST.tmp")
-    Files.writeString(tmp, m.toSeq.sortBy(_._1).map { case (b, v) => s"$b:$v" }.mkString("\n"))
-    Files.move(tmp, manifestPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeManifest(dir: String, m: Map[Int, String]): Unit =
+    VersionNames.replaceFile(manifestPath(dir),
+      m.toSeq.sortBy(_._1).map { case (b, v) => s"$b:$v" }.mkString("\n"))
 
   def bucketOf(keyCol: String, numBuckets: Int) =
     pmod(hash(col(keyCol)), lit(numBuckets))

@@ -53,10 +53,9 @@ object ChangeFeedTable {
       keyCols: Seq[String]): Long = {
     val hadPrev = ParquetTable.exists(dir)
     if (hadPrev) backfillMissing(spark, dir, keyCols)
-    ParquetTable.swap(spark, df, dir)
-    val vName = Paths.get(ParquetTable.currentPath(dir)).getFileName.toString
-    writeChangeFiles(spark, dir, keyCols, vName, bootstrap = !hadPrev)
-    VersionNames.idOf(vName)
+    val id = ParquetTable.swap(spark, df, dir)
+    writeChangeFiles(spark, dir, keyCols, VersionNames.format(id), bootstrap = !hadPrev)
+    id
   }
 
   /** Write `_cdf/v<name>` for the snapshot version `vName` (which must
@@ -95,10 +94,12 @@ object ChangeFeedTable {
   /** Backfill change files for committed versions that lack them —
     * repairs the swap-vs-move crash window so the feed never carries a
     * permanent silent gap. Oldest-first so a reader that starts midway
-    * still sees commits in order. */
+    * still sees commits in order. Only published versions count: an
+    * orphan (moved, never published) is invisible, and the next commit
+    * reclaims its slot. */
   private def backfillMissing(spark: SparkSession, dir: String,
       keyCols: Seq[String]): Unit = {
-    val names = ParquetTable.snapshots(dir) // newest first
+    val names = ParquetTable.snapshots(dir).filter(ParquetTable.publishedNames(dir)) // newest first
     names.zipWithIndex.reverse.foreach { case (vName, idx) =>
       if (!Files.isDirectory(cdfDir(dir).resolve(s"v$vName")))
         writeChangeFiles(spark, dir, keyCols, vName,
@@ -191,11 +192,7 @@ object ChangeFeedTable {
     val prior = if (Files.exists(truncatedMarker(dir)))
       scala.util.Try(Files.readString(truncatedMarker(dir)).trim.toLong).getOrElse(0L)
     else 0L
-    val tmp = cdfDir(dir).resolve("_TRUNCATED.tmp")
-    Files.writeString(tmp, math.max(prior, highest).toString)
-    Files.move(tmp, truncatedMarker(dir),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    ()
+    VersionNames.replaceFile(truncatedMarker(dir), math.max(prior, highest).toString)
   }
 
   /** Bin-pack each retained change dir toward the file-health target

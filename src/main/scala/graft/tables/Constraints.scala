@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.ParquetTable
+import graft.streaming.{ParquetTable, VersionNames}
 
 /** Write-time CHECK constraints for snapshot tables — the lakehouse
   * `ALTER TABLE ADD CONSTRAINT ... CHECK` surface. Constraints persist in
@@ -50,14 +50,8 @@ object Constraints {
     val existing = checks(dir)
     require(existing.exists(_._1 == name), s"no such check: $name")
     val remaining = existing.filterNot(_._1 == name)
-    val tmp = Paths.get(dir, "_CHECKS.tmp")
-    Files.writeString(tmp,
-      remaining.map { case (n, e) => s"$n\t$e" }.mkString("", "\n", if (remaining.isEmpty) "" else "\n"),
-      StandardCharsets.UTF_8)
-    Files.move(tmp, manifest(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
+    VersionNames.replaceFile(manifest(dir),
+      remaining.map { case (n, e) => s"$n\t$e" }.mkString("", "\n", if (remaining.isEmpty) "" else "\n"))
   }
 
   def checks(dir: String): Seq[(String, String)] =
@@ -136,14 +130,9 @@ object Constraints {
     val existing = uniques(dir)
     if (!existing.exists(_._1 == name)) return false
     val remaining = existing.filterNot(_._1 == name)
-    val tmp = Paths.get(dir, "_UNIQUES.tmp")
-    Files.writeString(tmp,
+    VersionNames.replaceFile(uManifest(dir),
       remaining.map { case (n, c) => s"$n\t${c.mkString(",")}" }
-        .mkString("", "\n", if (remaining.isEmpty) "" else "\n"),
-      StandardCharsets.UTF_8)
-    Files.move(tmp, uManifest(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        .mkString("", "\n", if (remaining.isEmpty) "" else "\n"))
     true
   }
 

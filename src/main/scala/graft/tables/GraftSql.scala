@@ -1592,22 +1592,10 @@ object GraftSql {
     * publish leaves a complete-looking dir that was never acknowledged
     * — resolving it here would read a PHANTOM commit through
     * `VERSION AS OF` (and RESTORE could resurrect it). The published
-    * set is the `_HISTORY` names plus the live pointer: the pointer
-    * flip precedes the history append, so the current version may
-    * transiently lack its line but is committed by definition. */
+    * set is [[ParquetTable.publishedNames]]. */
   private def versionNameOf(name: String, dir: String, v: Long): String = {
     val names = ParquetTable.snapshots(dir)
-    // The live pointer joins the published set ONLY when it is a local
-    // bare version name (mirroring currentPath's clone detection): a
-    // shallow clone's pointer is a path into the SOURCE table, and
-    // adding the source's version NAME here would let a same-named
-    // local orphan (a writer that crashed between move and publish)
-    // resolve as published — exactly the phantom-commit read this set
-    // exists to prevent.
-    val rawPointer = ParquetTable.currentVersion(dir)
-    val published0 = ParquetTable.publishedVersions(dir).map(_._1).toSet
-    val published =
-      if (rawPointer.contains("/")) published0 else published0 + rawPointer
+    val published = ParquetTable.publishedNames(dir)
     val i = names.indexWhere(n =>
       graft.streaming.VersionNames.idOf(n) == v && published(n))
     require(i >= 0, s"table '$name' has no published version $v " +
@@ -1884,12 +1872,7 @@ object GraftSql {
     val readSchema = dmlReadSchema(TableStats.readCurrent(s, ref.dir))
     def read(paths: Seq[String]) =
       readSchema.map(s.read.schema).getOrElse(s.read).parquet(paths: _*)
-    val df = read(Seq(cur.toString))
-    val hits = df.filter(cls(expr(pred), lit(false)))
-      .groupBy(col("_metadata.file_path").as("f")).count().collect()
-    val touched = hits
-      .map(r => java.nio.file.Paths.get(new java.net.URI(r.getString(0)).getPath)
-        .getFileName.toString).toSet
+    val (touched, _) = ParquetTable.filesMatching(read(Seq(cur.toString)), cls(expr(pred), lit(false)))
     val (nFilesBefore, _) = snapshotFiles(cur.toString)
     if (touched.isEmpty)
       return singleRow(s, Seq("name" -> name, "new_version" -> -1L,
@@ -1970,10 +1953,8 @@ object GraftSql {
     // an index-based restore would re-list and could shift under a
     // concurrent publish.
     val vname = versionNameOf(name, ref.dir, version)
-    ParquetTable.swap(s, s.read.parquet(s"${ref.dir}/$vname"), ref.dir)
+    val cv = ParquetTable.swap(s, s.read.parquet(s"${ref.dir}/$vname"), ref.dir)
     TableStats.reanalyzeOnPublish(s, ref.dir)
-    val cv = graft.streaming.VersionNames.idOf(
-      java.nio.file.Paths.get(ParquetTable.currentPath(ref.dir)).getFileName.toString)
     singleRow(s, Seq(
       "name" -> name, "restored_from" -> version, "new_version" -> cv,
       "n_rows" -> ParquetTable.read(s, ref.dir).count()))
@@ -1997,12 +1978,7 @@ object GraftSql {
     val merged = properties(ref.dir) ++ pairs
     val body = merged.toSeq.sortBy(_._1)
       .map { case (k, v) => s"$k\t$v" }.mkString("\n")
-    val p = java.nio.file.Paths.get(ref.dir, "_PROPS")
-    val tmp = java.nio.file.Paths.get(ref.dir, "_PROPS.tmp")
-    java.nio.file.Files.writeString(tmp, body)
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    graft.streaming.VersionNames.replaceFile(java.nio.file.Paths.get(ref.dir, "_PROPS"), body)
     showProperties(s, name)
   }
 
@@ -3027,21 +3003,19 @@ object GraftSql {
     // frontier ⋈ edges, the Σ-level-sizes shape the scaladoc promises.
     // Results are unchanged: the loop already assumes the step is
     // deterministic (it re-evaluates the same text each level).
-    // Opt out with spark.graft.recursive.hoistInvariant=false.
     val hoisted = scala.collection.mutable.ArrayBuffer.empty[String]
     try {
       // Inside the try: each invariant materializes eagerly, so a later
       // subquery throwing must reach the finally that drops the views
       // (and releases their checkpointed blocks) already created
       // (r16 ADVICE — the hoist used to run before the try).
-      if (!s.conf.getOption("spark.graft.recursive.hoistInvariant").contains("false"))
-        step = hoistLoopInvariants(step, name, { sub =>
-          val view = s"graft_rcte_inv_${hoisted.size}_" +
-            java.util.UUID.randomUUID.toString.replace("-", "").take(8)
-          Checkpoints.cut(sql(s, sub)).createOrReplaceTempView(view)
-          hoisted += view
-          view
-        })
+      step = hoistLoopInvariants(step, name, { sub =>
+        val view = s"graft_rcte_inv_${hoisted.size}_" +
+          java.util.UUID.randomUUID.toString.replace("-", "").take(8)
+        Checkpoints.cut(sql(s, sub)).createOrReplaceTempView(view)
+        hoisted += view
+        view
+      })
       val base0 = shape(sql(s, base))
       var acc = Checkpoints.cut(if (bag) base0 else base0.distinct())
       var working = acc
@@ -3262,13 +3236,7 @@ object GraftSql {
     val remaining = properties(ref.dir) - key
     val body = remaining.toSeq.sortBy(_._1)
       .map { case (k, v) => s"$k\t$v" }.mkString("\n")
-    val p = java.nio.file.Paths.get(ref.dir, "_PROPS")
-    val tmp = java.nio.file.Paths.get(ref.dir, "_PROPS.tmp")
-    java.nio.file.Files.writeString(tmp, body)
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
+    graft.streaming.VersionNames.replaceFile(java.nio.file.Paths.get(ref.dir, "_PROPS"), body)
   }
 
   private def singleRow(s: SparkSession, fields: Seq[(String, Any)]): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.tables
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -60,7 +60,6 @@ object MaterializedView {
   private def defPath(mvDir: String) = Paths.get(mvDir, "_MV")
 
   private def writeDef(mvDir: String, d: MvDef): Unit = {
-    val tmp = Paths.get(mvDir, "_MV.tmp")
     val lines = Seq(
       s"base\t${d.base}",
       s"groups\t${d.groupCols.mkString(",")}",
@@ -68,9 +67,7 @@ object MaterializedView {
       s"sums\t${d.sums.map { case (n, c) => s"$n:$c" }.mkString(",")}",
       s"refreshed\t${d.refreshedVersion}",
       s"mv\t${d.mvVersion}")
-    Files.writeString(tmp, lines.mkString("", "\n", "\n"))
-    Files.move(tmp, defPath(mvDir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    VersionNames.replaceFile(defPath(mvDir), lines.mkString("", "\n", "\n"))
   }
 
   def readDef(mvDir: String): MvDef = {

@@ -6,8 +6,8 @@ import java.nio.file.{Files, InvalidPathException}
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSLinkResolver,
-  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus,
+  FSLinkResolver, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -91,7 +91,10 @@ class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 
 /** Hadoop's `LocalFs` (a `ChecksumFs` over `RawLocalFs`) over
   * [[NioRawLocalFileSystem]]; the `fs.AbstractFileSystem.file.impl`
-  * class. Like `LocalFs` it ignores `uri` and serves `file:///`. */
+  * class. Like `LocalFs` it ignores `uri` and serves `file:///`. Unlike
+  * `LocalFs`, `open(path)` verifies the `.crc`: `FilterFs.open(Path)`
+  * reads the raw filesystem directly, and Spark's offset, commit and
+  * state logs are read through that one-argument form. */
 class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(
   new DelegateToFileSystem(FsConstants.LOCAL_FS_URI, new NioRawLocalFileSystem, conf,
       FsConstants.LOCAL_FS_URI.getScheme, false) {
@@ -100,4 +103,6 @@ class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(
     override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
     override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
     override def isValidName(src: String): Boolean = true
-  })
+  }) {
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}

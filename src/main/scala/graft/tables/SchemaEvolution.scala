@@ -1,6 +1,6 @@
 package graft.tables
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -122,10 +122,7 @@ object SchemaEvolution {
       mf.widens.toSeq.sortBy(_._1).map { case (p, t) => s"widen\t$p\t${t.sql}" } ++
       mf.comments.toSeq.sortBy(_._1).map { case (p, c) => s"comment\t$p\t$c" })
       .mkString("\n")
-    val tmp = Paths.get(dir, "_SCHEMA.tmp")
-    Files.writeString(tmp, body)
-    Files.move(tmp, schemaPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    graft.streaming.VersionNames.replaceFile(schemaPath(dir), body)
   }
 
   private def writeMapping(dir: String, m: ColumnMapping): Unit = {

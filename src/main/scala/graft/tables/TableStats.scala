@@ -1,6 +1,6 @@
 package graft.tables
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.streaming.ParquetTable
+import graft.streaming.{ParquetTable, VersionNames}
 
 /** `ANALYZE TABLE ... COMPUTE STATISTICS [FOR COLUMNS ...]` for graft
   * path tables (reference db/table_maintenance.sql:38-41) — the catalog
@@ -194,12 +194,7 @@ object TableStats {
       st.cols.toSeq.sortBy(_._1).map { case (c, cs) =>
         s"col\t${enc(c)}\t${cs.ndv}\t${cs.nullCount}\t${enc(cs.min)}\t${enc(cs.max)}\t${cs.avgLen}\t${cs.maxLen}"
       }
-    val p = Paths.get(dir, "_TABLE_STATS")
-    val tmp = Paths.get(dir, "_TABLE_STATS.tmp")
-    Files.writeString(tmp, lines.mkString("\n"))
-    Files.move(tmp, p,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    ()
+    VersionNames.replaceFile(Paths.get(dir, "_TABLE_STATS"), lines.mkString("\n"))
   }
 
   def read(dir: String): Option[Stats] = {

@@ -1,6 +1,6 @@
 package graft.tables
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** Named version tags (Iceberg's tags, Delta has no equivalent): a tag
   * is a durable name → version-id binding stored in the table root's
@@ -62,15 +62,7 @@ object Tags {
     * them (the id is what tag reads resolve through too). */
   def protectedIds(dir: String): Set[Long] = tagsOf(dir).map(_._2).toSet
 
-  private def write(dir: String, tags: Seq[(String, Long)]): Unit = {
-    // Writer-private temp name: a fixed "_TAGS.tmp" could be clobbered
-    // mid-rename by a concurrent writer that slipped past the JVM lock
-    // (another process); a UUID name at worst leaks one tiny orphan.
-    val tmp = Paths.get(dir, s"_TAGS.tmp-${java.util.UUID.randomUUID}")
-    Files.writeString(tmp, tags.sortBy(_._1).map { case (n, v) => s"$n\t$v" }
-      .mkString("", "\n", if (tags.isEmpty) "" else "\n"))
-    Files.move(tmp, file(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+  private def write(dir: String, tags: Seq[(String, Long)]): Unit =
+    graft.streaming.VersionNames.replaceFile(file(dir), tags.sortBy(_._1)
+      .map { case (n, v) => s"$n\t$v" }.mkString("", "\n", if (tags.isEmpty) "" else "\n"))
 }

@@ -123,11 +123,7 @@ object ValueIndex {
         .select(col(c).as("v"), col("_metadata.file_name").as("f"))
         .distinct()
         .write.mode("append").parquet(out.toString)
-    val tmp = out.resolve("_stamp.tmp")
-    Files.writeString(tmp, liveV)
-    Files.move(tmp, stampP,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    graft.streaming.VersionNames.replaceFile(stampP, liveV)
     true
   }
 

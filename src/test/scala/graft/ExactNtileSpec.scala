@@ -69,16 +69,12 @@ class ExactNtileSpec extends SparkSuite {
     assert(got == ref, s"native-type tie ordering: $got vs $ref")
   }
 
-  test("fused and r16 assignment arms are bit-identical (conf opt-out pinned)") {
+  test("fused assignment matches window ntile on a two-group tie set") {
     val rows = for {
       g <- Seq("en", "de")
       i <- 0 until (g.head - 'a' + 1) * 29
     } yield (g, ((i * 48271L) % 5).toDouble / 8.0, f"doc$i%04d")
-    val fused = exactTiles(rows, 4)
-    spark.conf.set("spark.graft.ntile.fused", "false")
-    val r16 = try exactTiles(rows, 4)
-    finally spark.conf.unset("spark.graft.ntile.fused")
-    assert(fused == r16)
+    assert(exactTiles(rows, 4) == referenceTiles(rows, 4))
   }
 
   test("withTile computes its input exactly 3 times (the r16 count pass stays gone)") {

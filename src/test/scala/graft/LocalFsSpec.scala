@@ -9,8 +9,8 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, LocalFileSystem,
-  Options, Path}
+import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileContext, FileStatus, FileSystem,
+  LocalFileSystem, Options, Path}
 import org.apache.hadoop.fs.local.LocalFs
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -131,9 +131,9 @@ class LocalFsSpec extends SparkSuite {
 
       // Reads check the .crc. FileSystem.open wraps the data in a
       // checksum checker; a corrupted file fails it, read here through
-      // FileContext with a buffer size (FileContext.open(path) skips the
-      // check, through FilterFs, and a failed FileSystem read moves the
-      // file to a bad_files directory at the top of its mount).
+      // FileContext with a buffer size (stock FileContext.open(path)
+      // skips the check, through FilterFs, and a failed FileSystem read
+      // moves the file to a bad_files directory at the top of its mount).
       write(fs.create(p("crc/f")), 2000)
       step("fs open")(scala.util.Using.resource(fs.open(p("crc/f")))(_.getWrappedStream.getClass.getName))
       val data = Files.readAllBytes(root.resolve("crc/f"))
@@ -151,6 +151,22 @@ class LocalFsSpec extends SparkSuite {
     assert(stock.exists(_.contains("ChecksumFSInputChecker")), "reads check the .crc")
     assert(stock.exists(_.contains("ChecksumException")), "a corrupted file fails its check")
     stock.zipAll(nio, "", "").foreach { case (s, n) => assert(n == s) }
+  }
+
+  test("FileContext.open(path) verifies the .crc, as the checkpoint logs read") {
+    val root = TmpDirs.create("graft-localfs-crc")
+    val c = conf(classOf[NioLocalFileSystem], classOf[NioLocalFs])
+    val fs = FileSystem.newInstance(URI.create("file:///"), c)
+    try {
+      val fc = FileContext.getFileContext(URI.create("file:///"), c)
+      val f = fs.makeQualified(new Path(root.resolve("f").toString))
+      write(fs.create(f), 2000)
+      assert(readAll(fc.open(f)) == 2000)
+      val data = Files.readAllBytes(root.resolve("f"))
+      data(100) = (data(100) ^ 1).toByte
+      Files.write(root.resolve("f"), data)
+      intercept[ChecksumException](readAll(fc.open(f)))
+    } finally { fs.close(); TmpDirs.deleteRecursively(root) }
   }
 
   test("SparkSessions.builder routes file: paths to the java.nio filesystem") {

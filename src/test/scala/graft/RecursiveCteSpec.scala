@@ -128,12 +128,7 @@ class RecursiveCteSpec extends SparkSuite {
         |  JOIN r ON e.a = r.n
         |) SELECT n FROM r""".stripMargin
     val hoistedR = GraftSql.sql(spark, stmt).collect().map(_.getLong(0)).sorted.toSeq
-    spark.conf.set("spark.graft.recursive.hoistInvariant", "false")
-    val inlineR =
-      try GraftSql.sql(spark, stmt).collect().map(_.getLong(0)).sorted.toSeq
-      finally spark.conf.unset("spark.graft.recursive.hoistInvariant")
     assert(hoistedR == Seq(1L, 2L, 3L, 4L), s"got $hoistedR")
-    assert(hoistedR == inlineR)
     assert(spark.catalog.listTables().collect()
       .forall(t => !t.name.startsWith("graft_rcte_inv_")),
       "hoisted views must be dropped after the statement")
@@ -211,12 +206,7 @@ class RecursiveCteSpec extends SparkSuite {
         |  WHERE e1.a = e2.c
         |) SELECT n FROM r""".stripMargin
     val hoistedR = GraftSql.sql(spark, stmt).collect().map(_.getLong(0)).sorted.toSeq
-    spark.conf.set("spark.graft.recursive.hoistInvariant", "false")
-    val inlineR =
-      try GraftSql.sql(spark, stmt).collect().map(_.getLong(0)).sorted.toSeq
-      finally spark.conf.unset("spark.graft.recursive.hoistInvariant")
     assert(hoistedR == Seq(1L, 2L, 3L, 4L), s"got $hoistedR")
-    assert(hoistedR == inlineR)
     assert(spark.catalog.listTables().collect()
       .forall(t => !t.name.startsWith("graft_rcte_inv_")),
       "hoisted views must be dropped after the statement")
