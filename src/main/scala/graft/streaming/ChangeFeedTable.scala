@@ -51,32 +51,30 @@ object ChangeFeedTable {
     * lacks them (the crash-window repair — see the object doc). */
   def publish(spark: SparkSession, df: DataFrame, dir: String,
       keyCols: Seq[String]): Long = {
-    val hadPrev = ParquetTable.exists(dir)
-    if (hadPrev) backfillMissing(spark, dir, keyCols)
+    backfillMissing(spark, dir, keyCols)
     val id = ParquetTable.swap(spark, df, dir)
-    writeChangeFiles(spark, dir, keyCols, VersionNames.format(id), bootstrap = !hadPrev)
+    val names = ParquetTable.snapshots(dir)
+    writeChangeFiles(spark, dir, keyCols, names, names.indexOf(VersionNames.format(id)))
     id
   }
 
-  /** Write `_cdf/v<name>` for the snapshot version `vName` (which must
-    * exist). `bootstrap` = emit the whole snapshot as inserts (Delta
-    * CDF's convention for the feed's first version); otherwise the diff
-    * vs the immediately older snapshot. */
+  /** Write `_cdf/v<name>` for `names(idx)`, where `names` is one read of
+    * the table's version list (newest first), so the version and its
+    * predecessor come from the same read: the diff vs the next older
+    * version, or, for the oldest, the whole snapshot as inserts (Delta
+    * CDF's convention for the feed's first version). */
   private def writeChangeFiles(spark: SparkSession, dir: String,
-      keyCols: Seq[String], vName: String, bootstrap: Boolean): Unit = {
-    val names = ParquetTable.snapshots(dir)
-    val idx = names.indexOf(vName)
-    require(idx >= 0, s"no snapshot $vName under $dir")
-    val vId = VersionNames.idOf(vName)
+      keyCols: Seq[String], names: Seq[String], idx: Int): Unit = {
+    val vName = names(idx)
     val changes =
-      if (bootstrap)
+      if (idx == names.size - 1)
         spark.read.parquet(s"$dir/$vName").withColumn("_change_type", lit("insert"))
       else
-        ParquetTable.changeFeed(spark, dir, idx + 1, idx, keyCols)
+        ParquetTable.changesBetween(spark, dir, names(idx + 1), vName, keyCols)
     val staged = Files.createTempDirectory(Paths.get(dir), "_cdf-stage-")
     try {
       val stagedOut = staged.resolve("out")
-      changes.withColumn("_commit_version", lit(vId))
+      changes.withColumn("_commit_version", lit(VersionNames.idOf(vName)))
         .write.parquet(stagedOut.toString)
       val target = cdfDir(dir).resolve(s"v$vName")
       Files.createDirectories(cdfDir(dir))
@@ -94,16 +92,15 @@ object ChangeFeedTable {
   /** Backfill change files for committed versions that lack them —
     * repairs the swap-vs-move crash window so the feed never carries a
     * permanent silent gap. Oldest-first so a reader that starts midway
-    * still sees commits in order. Only published versions count: an
-    * orphan (moved, never published) is invisible, and the next commit
-    * reclaims its slot. */
+    * still sees commits in order. The version list holds only published
+    * versions: an orphan (moved, never published) is invisible, and the
+    * next commit reclaims its slot. */
   private def backfillMissing(spark: SparkSession, dir: String,
       keyCols: Seq[String]): Unit = {
-    val names = ParquetTable.snapshots(dir).filter(ParquetTable.publishedNames(dir)) // newest first
-    names.zipWithIndex.reverse.foreach { case (vName, idx) =>
-      if (!Files.isDirectory(cdfDir(dir).resolve(s"v$vName")))
-        writeChangeFiles(spark, dir, keyCols, vName,
-          bootstrap = idx == names.size - 1)
+    val names = ParquetTable.snapshots(dir) // newest first
+    names.indices.reverse.foreach { idx =>
+      if (!Files.isDirectory(cdfDir(dir).resolve(s"v${names(idx)}")))
+        writeChangeFiles(spark, dir, keyCols, names, idx)
     }
   }
 

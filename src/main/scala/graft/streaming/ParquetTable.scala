@@ -59,10 +59,9 @@ private[graft] object VersionNames {
   *
   * Every superseded version stays on disk until `vacuum`, which gives
   * time travel for free (the reference gets it from Delta,
-  * db/query_table.sql:173-178): `snapshots` lists history newest-first,
-  * `readSnapshot(n)` reads the nth-newest (VERSION AS OF) and
-  * `readAsOf(ts)` the newest published at or before ts
-  * (TIMESTAMP AS OF). */
+  * db/query_table.sql:173-178). Every reader of that history takes its
+  * versions from one list, [[publishedVersions]]; a version dir outside
+  * it is a crashed writer's orphan, seen only by the door and vacuum. */
 object ParquetTable {
 
   private def pointer(dir: String) = Paths.get(dir, "_CURRENT")
@@ -81,42 +80,55 @@ object ParquetTable {
   def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(currentPath(dir))
 
-  /** Snapshot version names, newest first (numeric compare — immune to
-    * digit-count differences between naming epochs). */
-  def snapshots(dir: String): Seq[String] =
-    VersionNames.childNames(Paths.get(dir))
-      .filter(VersionNames.isVersionDir)
-      .sortBy(VersionNames.idOf).reverse
+  /** The published version names, newest first: [[publishedVersions]]
+    * without the timestamps. */
+  def snapshots(dir: String): Seq[String] = publishedVersions(dir).map(_._1)
 
   /** Time travel: read the nth-newest snapshot (0 == current). */
   def readSnapshot(spark: SparkSession, dir: String, n: Int): DataFrame =
     spark.read.parquet(s"$dir/${snapshots(dir)(n)}")
 
-  /** (version name, publish epoch-millis), newest first, live dirs only.
-    * Tolerant of a torn trailing line (the append is not atomic — a
-    * crash mid-write must not brick TIMESTAMP AS OF). */
-  def publishedVersions(dir: String): Seq[(String, Long)] = {
-    if (!Files.exists(history(dir))) return Seq.empty
-    val onDisk = snapshots(dir).toSet
-    Files.readAllLines(history(dir)).asScala
-      .flatMap { line =>
-        line.split("\t", 2) match {
-          case Array(v, ts) if VersionNames.isVersionDir(v) && ts.forall(_.isDigit) && ts.nonEmpty =>
-            Some(v -> ts.toLong)
-          case _ => None // torn/garbage line: skip, never throw
+  /** The one version list: (version name, publish epoch-millis), newest
+    * first by numeric id. It holds the `_HISTORY` lines whose dirs are
+    * on disk, plus the live local version when its line is missing (the
+    * pointer flip precedes the append), stamped with `_CURRENT`'s mtime.
+    * A shallow clone's pointer is a path into its source and never
+    * listed. Torn lines are skipped, never thrown on. */
+  def publishedVersions(dir: String): Seq[(String, Long)] = versionList(dir)._1
+
+  /** [[publishedVersions]], and the live version in it whose line is missing. */
+  private def versionList(dir: String): (Seq[(String, Long)], Option[(String, Long)]) = {
+    val onDisk = versionDirs(dir).toSet
+    val logged =
+      if (!Files.exists(history(dir))) Seq.empty
+      else Files.readAllLines(history(dir)).asScala.toSeq
+        .flatMap { line =>
+          line.split("\t", 2) match {
+            case Array(v, ts) if onDisk(v) && ts.nonEmpty && ts.forall(_.isDigit) => Some(v -> ts.toLong)
+            case _ => None // torn/garbage line, or a vacuumed version: skip, never throw
+          }
         }
-      }
-      .filter { case (v, _) => onDisk(v) }
-      .toSeq.sortBy { case (v, _) => -VersionNames.idOf(v) }
+    val cur = currentVersion(dir)
+    val unlogged =
+      if (!onDisk(cur) || logged.exists(_._1 == cur)) None
+      else Some(cur -> Files.getLastModifiedTime(pointer(dir)).toMillis)
+    ((logged ++ unlogged).sortBy { case (v, _) => -VersionNames.idOf(v) }, unlogged)
   }
+
+  /** Every version dir on disk, published or not: the list's on-disk
+    * check and vacuum's drop list. No reader looks past the list. */
+  private def versionDirs(dir: String): Seq[String] =
+    VersionNames.childNames(Paths.get(dir)).filter(VersionNames.isVersionDir)
 
   /** TIMESTAMP AS OF: read the newest snapshot published at or before
     * `tsMillis`. */
-  def readAsOf(spark: SparkSession, dir: String, tsMillis: Long): DataFrame = {
-    val candidates = publishedVersions(dir).filter(_._2 <= tsMillis)
-    require(candidates.nonEmpty, s"no snapshot in $dir at or before $tsMillis")
-    spark.read.parquet(s"$dir/${candidates.head._1}")
-  }
+  def readAsOf(spark: SparkSession, dir: String, tsMillis: Long): DataFrame =
+    spark.read.parquet(s"$dir/${versionAsOf(dir, tsMillis)}")
+
+  /** The name of the newest version published at or before `tsMillis`. */
+  private[graft] def versionAsOf(dir: String, tsMillis: Long): String =
+    publishedVersions(dir).find(_._2 <= tsMillis).map(_._1).getOrElse(
+      throw new IllegalArgumentException(s"no snapshot in $dir at or before epoch-millis $tsMillis"))
 
   /** RESTORE: republish the nth-newest snapshot as a NEW version (like
     * Delta RESTORE, which commits the rollback rather than rewriting
@@ -204,13 +216,14 @@ object ParquetTable {
     *  3. Run the caller's `write` into it, outside the lock: holding the
     *     lock over the expensive part would only widen the window.
     *  4. Under the per-table lock: run `validate` (throw to abandon),
-    *     claim the next version slot, move staging into it, publish.
+    *     log the live version if its `_HISTORY` line is missing, claim
+    *     the next version slot, move staging into it, publish.
     *  5. On any failure, reclaim the staging dir (vacuum never touches
     *     dot-dirs) and rethrow. Only a process crash leaves an orphan,
     *     and readers never see it (CommitDoorSpec).
     *
-    * Slot rule: next id = 1 + max(the published ids — `_HISTORY` plus a
-    * local live pointer — and `base`'s id when given). An unpublished
+    * Slot rule: next id = 1 + max(the ids of [[publishedVersions]] and
+    * `base`'s id when given). An unpublished
     * occupant of that slot is a crashed writer's orphan (moved, never
     * published), unreachable forever: it is reclaimed, or the table
     * would be stuck on that id. A published occupant can only be a
@@ -243,11 +256,11 @@ object ParquetTable {
           }
       }
       write(staging)
-      val lock = occLocks.computeIfAbsent(
-        Paths.get(dir).toAbsolutePath.normalize.toString, _ => new Object)
-      lock.synchronized {
+      locked(dir) {
         validate()
-        val published = publishedNames(dir).map(VersionNames.idOf)
+        val (listed, unlogged) = versionList(dir)
+        unlogged.foreach { case (v, ts) => appendHistory(dir, v, ts) }
+        val published = listed.map { case (v, _) => VersionNames.idOf(v) }
         val baseId = base.map(b => VersionNames.idOf(b.getFileName.toString))
         base.foreach { b =>
           val live = Paths.get(currentPath(dir)).toAbsolutePath.normalize
@@ -259,7 +272,7 @@ object ParquetTable {
         val next = VersionNames.format((published ++ baseId).maxOption.getOrElse(0L) + 1)
         val target = Paths.get(dir, next)
         if (Files.exists(target)) {
-          if (publishedNames(dir)(next))
+          if (published.contains(VersionNames.idOf(next)))
             throw new ConcurrentWriteException(
               s"$dir version slot $next was published concurrently " +
                 "(out-of-process writer?); the statement was NOT applied — re-read and retry")
@@ -499,11 +512,7 @@ object ParquetTable {
     val candidates = Files.list(src).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .map(_.toAbsolutePath.normalize.toString).toSeq.sorted
-    val loaded: Set[String] = snapshots(dir).flatMap { v =>
-      val p = Paths.get(dir, v, "_COPY")
-      if (Files.exists(p)) Files.readAllLines(p).asScala.filter(_.nonEmpty)
-      else Seq.empty
-    }.toSet
+    val loaded = stampLines(dir, "_COPY").filter(_.nonEmpty).toSet
     val fresh = candidates.filterNot(loaded)
     if (fresh.isEmpty) return (0L, 0L, candidates.size.toLong)
     val batch = transform(spark.read.parquet(fresh: _*)).persist()
@@ -647,9 +656,19 @@ object ParquetTable {
   def changeFeed(
       spark: SparkSession, dir: String, fromN: Int, toN: Int,
       keyCols: Seq[String]): DataFrame = {
+    val names = snapshots(dir)
+    changesBetween(spark, dir, names(fromN), names(toN), keyCols)
+  }
+
+  /** [[changeFeed]] between the version dirs named `from` and `to`.
+    * Callers resolve both names from one read of the version list: two
+    * listings could straddle a publish and diff the wrong pair. */
+  private[graft] def changesBetween(
+      spark: SparkSession, dir: String, from: String, to: String,
+      keyCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{array, col, explode, lit, struct, when}
-    val oldDf = readSnapshot(spark, dir, fromN)
-    val newDf = readSnapshot(spark, dir, toN)
+    val oldDf = spark.read.parquet(s"$dir/$from")
+    val newDf = spark.read.parquet(s"$dir/$to")
     val dataCols = oldDf.columns.filterNot(keyCols.contains).toSeq
     def pack(df: DataFrame, as: String) =
       df.select(keyCols.map(col) :+ struct(dataCols.map(col): _*).as(as): _*)
@@ -673,46 +692,51 @@ object ParquetTable {
     * drop list must use this return, not a separate [[vacuumDryRun]]
     * call (a concurrent swap between the two would make the report
     * diverge from what was deleted). */
-  def vacuum(dir: String, keep: Int = 1): Seq[String] = {
-    val doomed = vacuumDryRun(dir, keep)
-    doomed.foreach(v => VersionNames.deleteTree(Paths.get(dir, v)))
-    ChangeFeedTable.onVersionsVacuumed(dir, doomed)
-    doomed
-  }
+  def vacuum(dir: String, keep: Int = 1): Seq[String] =
+    drop(dir)(vacuumDryRun(dir, keep))
 
   /** VACUUM ... DRY RUN (reference db/table_maintenance.sql:13): the
-    * version names [[vacuum]] WOULD delete, without touching anything. */
-  def vacuumDryRun(dir: String, keep: Int = 1): Seq[String] = {
-    val current = Files.readString(pointer(dir)).trim
-    val pinned = graft.tables.Tags.protectedIds(dir)
-    snapshots(dir).drop(math.max(keep, 1))
-      .filter(v => v != current && !pinned(VersionNames.idOf(v)))
-  }
+    * version names [[vacuum]] WOULD delete, without touching anything.
+    * Counts every version dir on disk, so an unpublished orphan is
+    * reclaimed like a superseded version. */
+  def vacuumDryRun(dir: String, keep: Int = 1): Seq[String] =
+    droppable(dir, versionDirs(dir).sortBy(v => -VersionNames.idOf(v)).drop(math.max(keep, 1)))
 
   /** Time-based retention — VACUUM ... RETAIN n HOURS (reference
     * db/table_maintenance.sql:16, Delta's 168h default): drop superseded
     * snapshots whose publish time (from `_HISTORY`) is older than
     * `retainMillis` before `nowMillis`. The live version is always kept;
     * versions missing a history line (torn write) are kept conservatively. */
-  def vacuumRetain(dir: String, retainMillis: Long, nowMillis: Long = System.currentTimeMillis()): Seq[String] = {
-    val doomed = vacuumRetainDryRun(dir, retainMillis, nowMillis)
-    doomed.foreach(v => VersionNames.deleteTree(Paths.get(dir, v)))
-    ChangeFeedTable.onVersionsVacuumed(dir, doomed)
-    doomed
-  }
+  def vacuumRetain(dir: String, retainMillis: Long, nowMillis: Long = System.currentTimeMillis()): Seq[String] =
+    drop(dir)(vacuumRetainDryRun(dir, retainMillis, nowMillis))
 
   /** VACUUM ... RETAIN n HOURS DRY RUN: the names [[vacuumRetain]]
     * would delete, without touching anything. */
   def vacuumRetainDryRun(
       dir: String, retainMillis: Long,
-      nowMillis: Long = System.currentTimeMillis()): Seq[String] = {
-    val current = Files.readString(pointer(dir)).trim
-    val published = publishedVersions(dir).toMap
-    val cutoff = nowMillis - retainMillis
+      nowMillis: Long = System.currentTimeMillis()): Seq[String] =
+    droppable(dir, publishedVersions(dir).collect { case (v, ts) if ts < nowMillis - retainMillis => v })
+
+  /** `versions` minus the live one and the ones a tag pins. */
+  private def droppable(dir: String, versions: Seq[String]): Seq[String] = {
+    val current = currentVersion(dir)
     val pinned = graft.tables.Tags.protectedIds(dir)
-    snapshots(dir)
-      .filter(v => v != current && !pinned(VersionNames.idOf(v)))
-      .filter(v => published.get(v).exists(_ < cutoff))
+    versions.filter(v => v != current && !pinned(VersionNames.idOf(v)))
+  }
+
+  /** Vacuum's one drop step, under the per-table lock. Each doomed
+    * version is unpublished by one atomic rename to a `.vacuum-*` dir,
+    * which no reader lists, before it is deleted file by file: a crash
+    * mid-delete must not leave a partial version that `_HISTORY` still
+    * names. Leftover `.vacuum-*` dirs of a crashed vacuum go too. */
+  private def drop(dir: String)(doomed: => Seq[String]): Seq[String] = locked(dir) {
+    val gone = doomed
+    gone.foreach(v => Files.move(Paths.get(dir, v),
+      Paths.get(dir, s".vacuum-$v-${java.util.UUID.randomUUID}"), StandardCopyOption.ATOMIC_MOVE))
+    VersionNames.childNames(Paths.get(dir)).filter(_.startsWith(".vacuum-"))
+      .foreach(n => VersionNames.deleteTree(Paths.get(dir, n)))
+    ChangeFeedTable.onVersionsVacuumed(dir, gone)
+    gone
   }
 
   /** Write a new snapshot version and atomically repoint `_CURRENT`,
@@ -752,57 +776,53 @@ object ParquetTable {
   private val occLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Names of the versions this table has published: its `_HISTORY`
-    * lines plus the live pointer when that is a local bare name (a
-    * shallow clone's pointer is a path into its source, and adding the
-    * source's version NAME would let a same-named local orphan pass as
-    * published). The pointer flip precedes the history append, so the
-    * live version may lack its line. A version dir outside this set was
-    * moved but never published: a crashed writer's orphan, which no
-    * reader, time travel or txn stamp may see. */
-  private[graft] def publishedNames(dir: String): Set[String] = {
-    val cur = currentVersion(dir)
-    val fromHistory = publishedVersions(dir).map(_._1).toSet
-    if (cur.nonEmpty && !cur.contains("/")) fromHistory + cur else fromHistory
-  }
+  /** Run `body` under the per-table JVM lock (the door's and vacuum's). */
+  private def locked[T](dir: String)(body: => T): T =
+    occLocks.computeIfAbsent(Paths.get(dir).toAbsolutePath.normalize.toString, _ => new Object)
+      .synchronized(body)
 
   /** Atomically repoint `_CURRENT` at a fully-written version dir, then
     * append the history line. */
   private def publish(dir: String, next: String): Unit = {
     VersionNames.replaceFile(pointer(dir), next)
     // Publish wall-clock AFTER the pointer flip: a crash in between loses
-    // only the history line, never publishes an unreadable version.
-    Files.writeString(history(dir), s"$next\t${System.currentTimeMillis()}\n",
+    // only the history line (the next commit logs it from `_CURRENT`'s
+    // mtime), never publishes an unreadable version.
+    appendHistory(dir, next, System.currentTimeMillis())
+  }
+
+  /** Append one `_HISTORY` line. A crash mid-append leaves a torn last
+    * line without its newline: end it first, or this line fuses with it
+    * and both are skipped as garbage. */
+  private def appendHistory(dir: String, v: String, tsMillis: Long): Unit = {
+    val torn = Files.exists(history(dir)) && {
+      val f = new java.io.RandomAccessFile(history(dir).toFile, "r")
+      try f.length > 0 && { f.seek(f.length - 1); f.read() != '\n' } finally f.close()
+    }
+    Files.writeString(history(dir), (if (torn) "\n" else "") + s"$v\t$tsMillis\n",
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    ()
   }
 
   /** Highest writer-transaction version committed for `appId` — the read
     * side of [[swapWithTxn]] (Delta's `txn` action surface). Stamps live
     * INSIDE version dirs (underscore-prefixed, invisible to parquet
-    * readers), so the scan is bounded by the retained version count.
-    *
-    * Only PUBLISHED versions' stamps count (r13, closing the same
-    * unpublished-orphan class as versionNameOf/commitCow): a writer that
-    * crashed between its version-dir move and its publish leaves an
-    * on-disk dir whose `_TXN` stamp was never acknowledged — trusting it
-    * would make the replayed batch a silent no-op against data no reader
-    * can see (exactly-once broken the LOSSY way). */
-  def lastTxnVersion(dir: String, appId: String): Option[Long] = {
-    if (!Files.isDirectory(Paths.get(dir))) return None
-    val published = publishedNames(dir)
-    val stamps = snapshots(dir).filter(published).flatMap { v =>
-      val p = Paths.get(dir, v, "_TXN")
-      if (!Files.exists(p)) Seq.empty
-      else Files.readAllLines(p).asScala.flatMap { line =>
-        line.split("\t", 2) match {
-          case Array(a, ver) if a == appId && ver.nonEmpty && ver.forall(_.isDigit) =>
-            Some(ver.toLong)
-          case _ => None
-        }
+    * readers), so the scan is bounded by the retained version count. */
+  def lastTxnVersion(dir: String, appId: String): Option[Long] =
+    stampLines(dir, "_TXN").flatMap { line =>
+      line.split("\t", 2) match {
+        case Array(`appId`, ver) if ver.nonEmpty && ver.forall(_.isDigit) => Some(ver.toLong)
+        case _ => None
       }
-    }
-    if (stamps.isEmpty) None else Some(stamps.max)
-  }
+    }.maxOption
+
+  /** The lines of the bookkeeping file `name` (`_TXN`, `_COPY`) across the
+    * published versions only: a crashed writer's orphan carries a stamp
+    * that was never acknowledged, and trusting it would make a replayed
+    * batch or file a silent no-op against data no reader can see. */
+  private def stampLines(dir: String, name: String): Seq[String] =
+    snapshots(dir).map(v => Paths.get(dir, v, name)).filter(Files.exists(_))
+      .flatMap(p => Files.readAllLines(p).asScala)
 
   /** Idempotent [[swap]] — the Delta `txn`-action shape that makes a
     * `foreachBatch` sink into a versioned table EXACTLY-ONCE across

@@ -1583,24 +1583,20 @@ object GraftSql {
     q
   }
 
-  /** Resolve an ABSOLUTE version id to its version directory name — the
-    * one listing is reused by every caller (a second listing could see a
-    * concurrent publish and shift newest-first indices under us).
-    *
-    * Only PUBLISHED versions are addressable (r12): a writer that
-    * crashed between its atomic version-dir move and its `_CURRENT`
-    * publish leaves a complete-looking dir that was never acknowledged
-    * — resolving it here would read a PHANTOM commit through
-    * `VERSION AS OF` (and RESTORE could resurrect it). The published
-    * set is [[ParquetTable.publishedNames]]. */
-  private def versionNameOf(name: String, dir: String, v: Long): String = {
+  /** Resolve ABSOLUTE version ids to their version directory names from
+    * one read of the version list (a second read could see a concurrent
+    * publish). Only published versions are in the list: a writer that
+    * crashed between its version-dir move and its publish leaves a
+    * complete-looking dir that was never acknowledged — resolving it
+    * would read a PHANTOM commit through `VERSION AS OF` (and RESTORE
+    * could resurrect it). */
+  private def versionNamesOf(name: String, dir: String, vs: Long*): Seq[String] = {
     val names = ParquetTable.snapshots(dir)
-    val published = ParquetTable.publishedNames(dir)
-    val i = names.indexWhere(n =>
-      graft.streaming.VersionNames.idOf(n) == v && published(n))
-    require(i >= 0, s"table '$name' has no published version $v " +
-      s"(have: ${names.filter(published).map(graft.streaming.VersionNames.idOf)})")
-    names(i)
+    vs.map { v =>
+      names.find(graft.streaming.VersionNames.idOf(_) == v).getOrElse(
+        throw new IllegalArgumentException(s"table '$name' has no published version $v " +
+          s"(have: ${names.map(graft.streaming.VersionNames.idOf)})"))
+    }
   }
 
   /** Snapshot with ABSOLUTE version id `v` of a registered table —
@@ -1611,17 +1607,14 @@ object GraftSql {
   private def snapshotAt(s: SparkSession, name: String, v: Long): DataFrame = {
     val ref = resolve(s, name)
     SchemaEvolution.readEvolvedAt(
-      s, ref.dir, s"${ref.dir}/${versionNameOf(name, ref.dir, v)}")
+      s, ref.dir, s"${ref.dir}/${versionNamesOf(name, ref.dir, v).head}")
   }
 
   /** TIMESTAMP AS OF twin of [[snapshotAt]]: newest snapshot published
     * at or before `millis`, read through the current manifest. */
   private def snapshotAsOf(s: SparkSession, name: String, millis: Long): DataFrame = {
     val ref = resolve(s, name)
-    val candidates = ParquetTable.publishedVersions(ref.dir).filter(_._2 <= millis)
-    require(candidates.nonEmpty,
-      s"table '$name' has no snapshot at or before epoch-millis $millis")
-    SchemaEvolution.readEvolvedAt(s, ref.dir, s"${ref.dir}/${candidates.head._1}")
+    SchemaEvolution.readEvolvedAt(s, ref.dir, s"${ref.dir}/${ParquetTable.versionAsOf(ref.dir, millis)}")
   }
 
   /** 'yyyy-MM-dd[ HH:mm:ss[.fraction]]' (or ISO 'T' form) as UTC epoch
@@ -1642,10 +1635,8 @@ object GraftSql {
     * (reference db/table_maintenance.sql:101). */
   def restoreToTimestamp(s: SparkSession, name: String, ts: String): DataFrame = {
     val ref = resolve(s, name)
-    val millis = parseTsUtc(ts)
-    val candidates = ParquetTable.publishedVersions(ref.dir).filter(_._2 <= millis)
-    require(candidates.nonEmpty, s"table '$name' has no snapshot at or before $ts")
-    restoreTo(s, name, graft.streaming.VersionNames.idOf(candidates.head._1))
+    restoreTo(s, name,
+      graft.streaming.VersionNames.idOf(ParquetTable.versionAsOf(ref.dir, parseTsUtc(ts))))
   }
 
   /** CREATE TABLE new SHALLOW|DEEP CLONE src (reference
@@ -1700,11 +1691,9 @@ object GraftSql {
       .filter(p => df.columns.exists(_.equalsIgnoreCase(p)))
     if (purgedCols.nonEmpty) df = df.drop(purgedCols: _*)
     val target = math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes).toInt
-    ParquetTable.swap(s, df.coalesce(target), ref.dir)
+    val cv = ParquetTable.swap(s, df.coalesce(target), ref.dir)
     TableStats.reanalyzeOnPublish(s, ref.dir)
-    val (nFilesAfter, _) = snapshotFiles(ParquetTable.currentPath(ref.dir))
-    val cv = graft.streaming.VersionNames.idOf(
-      java.nio.file.Paths.get(ParquetTable.currentPath(ref.dir)).getFileName.toString)
+    val (nFilesAfter, _) = snapshotFiles(s"${ref.dir}/${graft.streaming.VersionNames.format(cv)}")
     singleRow(s, Seq(
       "name" -> name, "new_version" -> cv,
       "n_files_before" -> nFilesBefore, "n_files_after" -> nFilesAfter,
@@ -1830,11 +1819,9 @@ object GraftSql {
       case Some(cols) => graft.tables.ZOrder.cluster(cur, cols, target)
       case None => cur.coalesce(target)
     }
-    ParquetTable.swap(s, packed, ref.dir)
+    val cv = ParquetTable.swap(s, packed, ref.dir)
     TableStats.reanalyzeOnPublish(s, ref.dir)
-    val (nFilesAfter, _) = snapshotFiles(ParquetTable.currentPath(ref.dir))
-    val cv = graft.streaming.VersionNames.idOf(
-      java.nio.file.Paths.get(ParquetTable.currentPath(ref.dir)).getFileName.toString)
+    val (nFilesAfter, _) = snapshotFiles(s"${ref.dir}/${graft.streaming.VersionNames.format(cv)}")
     singleRow(s, Seq(
       "name" -> name, "new_version" -> cv,
       "n_files_before" -> nFilesBefore, "n_files_after" -> nFilesAfter,
@@ -1952,7 +1939,7 @@ object GraftSql {
     // Resolve the id to a version NAME once and swap that snapshot in —
     // an index-based restore would re-list and could shift under a
     // concurrent publish.
-    val vname = versionNameOf(name, ref.dir, version)
+    val vname = versionNamesOf(name, ref.dir, version).head
     val cv = ParquetTable.swap(s, s.read.parquet(s"${ref.dir}/$vname"), ref.dir)
     TableStats.reanalyzeOnPublish(s, ref.dir)
     singleRow(s, Seq(
@@ -3250,8 +3237,9 @@ object GraftSql {
       java.util.Collections.singletonList(Row.fromSeq(fields.map(_._2))), schema)
   }
 
-  /** One row per snapshot, newest first: version id, publish timestamp
-    * (NULL for a torn/missing `_HISTORY` line), whether it is the live
+  /** One row per published version, newest first: version id, publish
+    * timestamp (`_CURRENT`'s mtime for a live version whose `_HISTORY`
+    * line is missing), whether it is the live
     * version, and per-snapshot file/row/byte tallies. Row counts come
     * from parquet footers (a metadata-only Spark count), so the whole
     * statement is manifest+footer reads — no data scan; a LIMIT bounds
@@ -3260,16 +3248,15 @@ object GraftSql {
     * ANOTHER table) marks no local version current instead of
     * mislabeling a same-named one. */
   def describeHistory(s: SparkSession, dir: String, limit: Option[Int] = None): DataFrame = {
-    val published = ParquetTable.publishedVersions(dir).toMap
     val current = java.nio.file.Paths.get(ParquetTable.currentPath(dir))
       .toAbsolutePath.normalize
-    val names = ParquetTable.snapshots(dir)
-    val rows = limit.fold(names)(names.take).map { v =>
+    val versions = ParquetTable.publishedVersions(dir)
+    val rows = limit.fold(versions)(versions.take).map { case (v, ms) =>
       val (nFiles, bytes) = snapshotFiles(s"$dir/$v")
       Row(
         graft.streaming.VersionNames.idOf(v),
         v,
-        published.get(v).map(ms => new java.sql.Timestamp(ms)).orNull,
+        new java.sql.Timestamp(ms),
         java.nio.file.Paths.get(dir, v).toAbsolutePath.normalize == current,
         s.read.parquet(s"$dir/$v").count(),
         nFiles,
@@ -3335,13 +3322,10 @@ object GraftSql {
       val snapFacts =
         if (!versioned) Seq.empty[Row]
         else {
-          val snaps = ParquetTable.snapshots(dir)
-          val cur = java.nio.file.Paths.get(ParquetTable.currentPath(dir))
-            .getFileName.toString
-          val (nFiles, bytes) = snapshotFiles(ParquetTable.currentPath(dir))
+          val (cur, nSnaps, nFiles, bytes) = snapshotFacts(dir)
           Seq(
-            Row("Current Version", graft.streaming.VersionNames.idOf(cur).toString, null),
-            Row("Num Snapshots", snaps.size.toString, null),
+            Row("Current Version", cur.toString, null),
+            Row("Num Snapshots", nSnaps.toString, null),
             Row("Num Files", nFiles.toString, null),
             Row("Size Bytes", bytes.toString, null))
         }
@@ -3379,22 +3363,21 @@ object GraftSql {
         StructField("comment", StringType, nullable = true))))
   }
 
+  /** The live version's id, the number of published versions, and the
+    * live version's data files and bytes: what DESCRIBE DETAIL and
+    * DESCRIBE EXTENDED report. */
+  private def snapshotFacts(dir: String): (Long, Long, Long, Long) = {
+    val cur = ParquetTable.currentPath(dir)
+    val (nFiles, bytes) = snapshotFiles(cur)
+    (graft.streaming.VersionNames.idOf(java.nio.file.Paths.get(cur).getFileName.toString),
+      ParquetTable.snapshots(dir).size.toLong, nFiles, bytes)
+  }
+
   /** One row describing the live snapshot (Delta's DESCRIBE DETAIL
     * shape: format/location/counts). */
   def describeDetail(s: SparkSession, name: String, dir: String): DataFrame = {
-    val snaps = ParquetTable.snapshots(dir)
-    val cur = java.nio.file.Paths.get(ParquetTable.currentPath(dir))
-      .getFileName.toString
-    val (nFiles, bytes) = snapshotFiles(ParquetTable.currentPath(dir))
-    val row = Row(
-      "parquet",
-      name,
-      dir,
-      graft.streaming.VersionNames.idOf(cur),
-      snaps.size.toLong,
-      ParquetTable.read(s, dir).count(),
-      nFiles,
-      bytes)
+    val (cur, nSnaps, nFiles, bytes) = snapshotFacts(dir)
+    val row = Row("parquet", name, dir, cur, nSnaps, ParquetTable.read(s, dir).count(), nFiles, bytes)
     s.createDataFrame(
       java.util.Collections.singletonList(row),
       StructType(Seq(
@@ -3453,13 +3436,8 @@ object GraftSql {
     val ref = resolve(s, name)
     require(ref.keyCols.nonEmpty,
       s"table_changes needs key columns: register '$name' with keyCols")
-    val names = ParquetTable.snapshots(ref.dir)
-    def idx(v: Long): Int = {
-      val i = names.indexWhere(graft.streaming.VersionNames.idOf(_) == v)
-      require(i >= 0, s"table '$name' has no version $v (have: ${names.map(graft.streaming.VersionNames.idOf)})")
-      i
-    }
-    ParquetTable.changeFeed(s, ref.dir, idx(v1), idx(v2), ref.keyCols)
+    val Seq(from, to) = versionNamesOf(name, ref.dir, v1, v2)
+    ParquetTable.changesBetween(s, ref.dir, from, to, ref.keyCols)
       .withColumn("_commit_version", lit(v2))
   }
 

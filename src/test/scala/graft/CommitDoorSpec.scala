@@ -141,6 +141,13 @@ class CommitDoorSpec extends SparkSuite {
       assert(ParquetTable.publishedVersions(dir).exists(_._1 == VersionNames.format(id)))
       assert(rows(dir) == p.expected)
       assert(stagingDirs(dir) == planted, s"staging left behind: ${stagingDirs(dir) -- planted}")
+      if (state.startsWith("flipped pointer")) {
+        val names = ParquetTable.publishedVersions(dir).map(_._1)
+        val i = names.indexOf(VersionNames.format(2L))
+        assert(i >= 0, s"the once-live version 2 must stay published: $names")
+        assert(ParquetTable.readSnapshot(spark, dir, i).select(col("k").cast("long"), col("v").cast("double"))
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet == base)
+      }
     }
 
   for (p <- publishers; fail <- p.failing)
