@@ -1,9 +1,6 @@
 package graft.streaming
 
-import scala.util.Using
-
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.OneToOneDependency
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -191,6 +188,8 @@ object CdcStreaming {
     * is one-to-one steps over a single FileScanRDD (which drop rows, never
     * add any), and the parquet footers count the rows — a new file can be
     * footer-only, as the parquet sink writes for a batch without output.
+    * The footers are read through [[graft.tables.FooterSchemas]], so a
+    * later SQL read of the same files finds their schemas resolved.
     * Any other plan falls back to `isEmpty`, which runs a job. */
   private[streaming] def isEmptyBatch(batch: DataFrame): Boolean = {
     @annotation.tailrec
@@ -200,12 +199,11 @@ object CdcStreaming {
       case _ => None
     }
     Some(batch.queryExecution.logical).collect { case r: LogicalRDD => r.rdd }.flatMap(scan)
-      .map(_.filePartitions.flatMap(_.files).map(_.toPath).distinct)
-      .filter(_.forall(_.getName.endsWith(".parquet"))) match {
-      case Some(paths) =>
-        val conf = batch.sparkSession.sparkContext.hadoopConfiguration
-        paths.forall(p => Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(p, conf)))(
-          _.getRecordCount == 0))
+      .map(_.filePartitions.flatMap(_.files).distinctBy(_.toPath).toSeq)
+      .filter(_.forall(_.toPath.getName.endsWith(".parquet"))) match {
+      case Some(files) =>
+        graft.tables.FooterSchemas.facts(batch.sparkSession, files.map(f =>
+          new FileStatus(f.fileSize, false, 0, 0, f.modificationTime, f.toPath))).forall(_.rows == 0)
       case None => batch.isEmpty
     }
   }

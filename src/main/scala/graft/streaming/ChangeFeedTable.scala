@@ -7,6 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.tables.FooterSchemas
+
 /** STREAMING change data feed for the versioned snapshot table — the
   * Delta `readChangeFeed` streaming-source semantics
   * (reference consumes this from Delta; db/query_scd1_table.sql:157-158
@@ -68,7 +70,7 @@ object ChangeFeedTable {
     val vName = names(idx)
     val changes =
       if (idx == names.size - 1)
-        spark.read.parquet(s"$dir/$vName").withColumn("_change_type", lit("insert"))
+        ParquetTable.readLive(spark, dir, vName).withColumn("_change_type", lit("insert"))
       else
         ParquetTable.changesBetween(spark, dir, names(idx + 1), vName, keyCols)
     val staged = Files.createTempDirectory(Paths.get(dir), "_cdf-stage-")
@@ -136,7 +138,7 @@ object ChangeFeedTable {
     // `_cdf`'s children are vNNN dirs (not key=value partitions), so the
     // schema probe must glob into them — a read of the root finds no
     // footers.
-    val schema = spark.read.parquet(s"${p.toString}/*").schema
+    val schema = FooterSchemas.read(spark, s"${p.toString}/*").schema
     spark.readStream.schema(schema).parquet(s"${p.toString}/*")
   }
 
@@ -156,11 +158,11 @@ object ChangeFeedTable {
     val curPath = ParquetTable.currentPath(dir)
     val curId = VersionNames.idOf(
       Paths.get(curPath).getFileName.toString)
-    val snapSchema = spark.read.parquet(curPath).schema
+    val snapSchema = FooterSchemas.read(spark, curPath).schema
     val boot = spark.readStream.schema(snapSchema).parquet(curPath)
       .withColumn("_change_type", lit("insert"))
       .withColumn("_commit_version", lit(curId))
-    val feedSchema = spark.read.parquet(s"${p.toString}/*").schema
+    val feedSchema = FooterSchemas.read(spark, s"${p.toString}/*").schema
     val tail = spark.readStream.schema(feedSchema).parquet(s"${p.toString}/*")
       .filter(col("_commit_version") > curId)
     boot.unionByName(tail)
@@ -169,7 +171,7 @@ object ChangeFeedTable {
   /** Batch view of the same change files (the `table_changes` dual over
     * the at-commit feed — no snapshot diffing at read time). */
   def changeFeedBatch(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${cdfDir(dir).toString}/*")
+    FooterSchemas.read(spark, s"${cdfDir(dir).toString}/*")
 
   private def truncatedMarker(dir: String) = cdfDir(dir).resolve("_TRUNCATED")
 

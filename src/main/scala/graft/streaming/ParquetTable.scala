@@ -6,6 +6,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.tables.FooterSchemas
+
 /** Shared snapshot-version naming: zero-padded monotonic ids, parsed and
   * ordered numerically (immune to digit-count differences between naming
   * epochs). One definition for ParquetTable and BucketedTable — the two
@@ -77,8 +79,11 @@ object ParquetTable {
     if (v.contains("/")) v else s"$dir/$v"
   }
 
+  /** The live snapshot's files, read plainly: deletion vectors are not
+    * applied (see [[readMoR]]). The schema comes from memoized footers
+    * ([[graft.tables.FooterSchemas]]), with no Spark job. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(currentPath(dir))
+    FooterSchemas.read(spark, currentPath(dir))
 
   /** The published version names, newest first: [[publishedVersions]]
     * without the timestamps. */
@@ -86,7 +91,7 @@ object ParquetTable {
 
   /** Time travel: read the nth-newest snapshot (0 == current). */
   def readSnapshot(spark: SparkSession, dir: String, n: Int): DataFrame =
-    spark.read.parquet(s"$dir/${snapshots(dir)(n)}")
+    FooterSchemas.read(spark, s"$dir/${snapshots(dir)(n)}")
 
   /** The one version list: (version name, publish epoch-millis), newest
     * first by numeric id. It holds the `_HISTORY` lines whose dirs are
@@ -123,7 +128,7 @@ object ParquetTable {
   /** TIMESTAMP AS OF: read the newest snapshot published at or before
     * `tsMillis`. */
   def readAsOf(spark: SparkSession, dir: String, tsMillis: Long): DataFrame =
-    spark.read.parquet(s"$dir/${versionAsOf(dir, tsMillis)}")
+    FooterSchemas.read(spark, s"$dir/${versionAsOf(dir, tsMillis)}")
 
   /** The name of the newest version published at or before `tsMillis`. */
   private[graft] def versionAsOf(dir: String, tsMillis: Long): String =
@@ -330,7 +335,7 @@ object ParquetTable {
   def truncate(spark: SparkSession, dir: String): Long = {
     val cur = Paths.get(currentPath(dir))
     requireNoDv(cur, "truncate")
-    val df = spark.read.parquet(cur.toString)
+    val df = FooterSchemas.read(spark, cur.toString)
     val n = df.count() // answered from parquet footers, not a data scan
     // limit(0) keeps the schema; the single empty partition still emits
     // one footer-only part file, so readers of the new snapshot resolve
@@ -580,19 +585,31 @@ object ParquetTable {
   def readMoR(spark: SparkSession, dir: String,
       readSchema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
     val cur = Paths.get(currentPath(dir))
-    readDv(spark, cur) match {
-      case None => plainRead(spark, cur, readSchema)
-      case Some(dv) =>
-        liveRowsWith(spark, cur, dv, readSchema).drop("_file", "_rid")
-    }
+    withoutDeleted(spark, cur, plainRead(spark, cur, readSchema))
   }
 
   private def plainRead(spark: SparkSession, versionDir: java.nio.file.Path,
       readSchema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
     readSchema match {
       case Some(sch) => spark.read.schema(sch).parquet(versionDir.toString)
-      case None      => spark.read.parquet(versionDir.toString)
+      case None      => FooterSchemas.read(spark, versionDir.toString)
     }
+
+  /** `scan`, a plain read of the files of `versionDir`, minus the rows
+    * its deletion vectors name. A dir without a `_dv` store costs one
+    * directory check, and `scan` comes back as it was. */
+  private[graft] def withoutDeleted(spark: SparkSession, versionDir: java.nio.file.Path,
+      scan: DataFrame): DataFrame =
+    readDv(spark, versionDir) match {
+      case None => scan
+      case Some(dv) => minusDv(tagged(scan), dv).drop("_file", "_rid")
+    }
+
+  /** Version dir `v` of the table at `dir`, minus its deletion vectors. */
+  private[graft] def readLive(spark: SparkSession, dir: String, v: String): DataFrame = {
+    val versionDir = Paths.get(dir, v)
+    withoutDeleted(spark, versionDir, FooterSchemas.read(spark, versionDir.toString))
+  }
 
   /** Fold the deletion vectors back into clean data files: one rewrite
     * of the surviving rows as a fresh version with an empty DV store —
@@ -613,33 +630,28 @@ object ParquetTable {
   private def readDv(
       spark: SparkSession, versionDir: java.nio.file.Path): Option[DataFrame] = {
     val dv = versionDir.resolve("_dv")
-    if (Files.isDirectory(dv)) Some(spark.read.parquet(dv.toString)) else None
+    if (Files.isDirectory(dv)) Some(FooterSchemas.read(spark, dv.toString)) else None
   }
 
   /** Snapshot rows tagged with (_file, _rid) scan positions, minus any
     * deletion vectors. */
-  private def liveRows(spark: SparkSession, versionDir: java.nio.file.Path): DataFrame =
-    readDv(spark, versionDir) match {
-      case Some(dv) => liveRowsWith(spark, versionDir, dv)
-      case None     => taggedRows(spark, versionDir)
-    }
+  private def liveRows(spark: SparkSession, versionDir: java.nio.file.Path): DataFrame = {
+    val rows = tagged(plainRead(spark, versionDir, None))
+    readDv(spark, versionDir).fold(rows)(minusDv(rows, _))
+  }
 
-  private def liveRowsWith(
-      spark: SparkSession, versionDir: java.nio.file.Path, dv: DataFrame,
-      readSchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+  private def minusDv(tagged: DataFrame, dv: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    val tagged = taggedRows(spark, versionDir, readSchema)
     tagged.join(broadcast(dv),
       tagged("_file") === dv("file") && tagged("_rid") === dv("row_index"),
       "left_anti")
   }
 
-  /** Rows with their scan position: file NAME (stable across the
+  /** A scan's rows with their position: file NAME (stable across the
     * hard-link generations) + in-file row index. */
-  private def taggedRows(spark: SparkSession, versionDir: java.nio.file.Path,
-      readSchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+  private def tagged(scan: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
-    plainRead(spark, versionDir, readSchema)
+    scan
       .withColumn("_file", expr("regexp_extract(_metadata.file_path, '([^/]+)$', 1)"))
       .withColumn("_rid", col("_metadata.row_index"))
   }
@@ -660,15 +672,16 @@ object ParquetTable {
     changesBetween(spark, dir, names(fromN), names(toN), keyCols)
   }
 
-  /** [[changeFeed]] between the version dirs named `from` and `to`.
+  /** [[changeFeed]] between the version dirs named `from` and `to`, each
+    * read minus its deletion vectors.
     * Callers resolve both names from one read of the version list: two
     * listings could straddle a publish and diff the wrong pair. */
   private[graft] def changesBetween(
       spark: SparkSession, dir: String, from: String, to: String,
       keyCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{array, col, explode, lit, struct, when}
-    val oldDf = spark.read.parquet(s"$dir/$from")
-    val newDf = spark.read.parquet(s"$dir/$to")
+    val oldDf = readLive(spark, dir, from)
+    val newDf = readLive(spark, dir, to)
     val dataCols = oldDf.columns.filterNot(keyCols.contains).toSeq
     def pack(df: DataFrame, as: String) =
       df.select(keyCols.map(col) :+ struct(dataCols.map(col): _*).as(as): _*)
@@ -736,6 +749,7 @@ object ParquetTable {
     VersionNames.childNames(Paths.get(dir)).filter(_.startsWith(".vacuum-"))
       .foreach(n => VersionNames.deleteTree(Paths.get(dir, n)))
     ChangeFeedTable.onVersionsVacuumed(dir, gone)
+    FooterSchemas.forget(gone.map(v => s"$dir/$v"))
     gone
   }
 

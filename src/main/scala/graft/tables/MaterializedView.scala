@@ -164,7 +164,7 @@ object MaterializedView {
     // The stamp names the MV version it describes: a crash after the
     // swap but before the stamp replays these commits onto THIS
     // snapshot, not onto the orphaned newer one.
-    val cur = spark.read.parquet(s"$mvDir/${d.mvVersion}")
+    val cur = FooterSchemas.read(spark, s"$mvDir/${d.mvVersion}")
     val cnt = coalesce(col(d.countName), lit(0L)) +
       coalesce(col(s"_d_${d.countName}"), lit(0L))
     val maintained = d.sums.flatMap { case (n, c) =>

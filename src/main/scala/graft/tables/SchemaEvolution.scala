@@ -43,9 +43,10 @@ import org.apache.spark.sql.types._
   * once per query — the rename/drop operations are O(1) regardless of
   * table size, exactly why column mapping exists at 100 TB (a physical
   * rewrite of every file is the alternative). mergeSchema-on-read
-  * unions footers across files — at 100 TB pin the table schema in a
-  * catalog and use it as the read schema instead of re-deriving per
-  * query; `readEvolved` is the catalog-less fallback.
+  * unions footers across files, each footer read once and memoized
+  * ([[FooterSchemas]]), so a query re-derives the union from the file
+  * listing alone — at 100 TB pin the table schema in a catalog and skip
+  * even that; `readEvolved` is the catalog-less fallback.
   */
 object SchemaEvolution {
 
@@ -153,7 +154,7 @@ object SchemaEvolution {
       if (graft.streaming.ParquetTable.exists(dir))
         graft.streaming.ParquetTable.currentPath(dir)
       else dir
-    spark.read.option("mergeSchema", "true").parquet(dataPath).schema
+    FooterSchemas.read(spark, dataPath, mergeSchema = true).schema
   }
 
   /** RENAME COLUMN old→new: metadata-only manifest update, zero files
@@ -425,19 +426,26 @@ object SchemaEvolution {
     * table's CURRENT logical view — renames, drops, widens — over the
     * selected snapshot's files, exactly as Delta's column-mapping time
     * travel does. `manifestDir` is the table root; `dataPath` the
-    * snapshot directory (or the root itself for plain reads). */
-  def readEvolvedAt(spark: SparkSession, manifestDir: String, dataPath: String): DataFrame =
-    manifestOf(manifestDir) match {
-      case None => spark.read.option("mergeSchema", "true").parquet(dataPath)
+    * snapshot directory (or the root itself for plain reads).
+    *
+    * A version dir's deletion vectors apply: rows `deleteWhereDV`
+    * removed stay removed in every mount and time-travel read. Without a
+    * manifest ptype schema the footer union comes from memoized footers
+    * ([[FooterSchemas]]), with no Spark job. */
+  def readEvolvedAt(spark: SparkSession, manifestDir: String, dataPath: String): DataFrame = {
+    val mf = manifestOf(manifestDir)
+    // With an authoritative physical schema (post-widen) the scan uses
+    // it directly — pre-widen files upcast in the reader, missing
+    // later-added columns null-fill. Without one, the union of the
+    // footers' schemas.
+    val scan = mf.flatMap(_.physicalReadSchema) match {
+      case Some(ps) => spark.read.schema(ps).parquet(dataPath)
+      case None => FooterSchemas.read(spark, dataPath, mergeSchema = true)
+    }
+    val raw = graft.streaming.ParquetTable.withoutDeleted(spark, Paths.get(dataPath), scan)
+    mf match {
+      case None => raw
       case Some(mf) =>
-        // With an authoritative physical schema (post-widen) the scan
-        // uses it directly — pre-widen files upcast in the reader,
-        // missing later-added columns null-fill, and no footer merge
-        // ever runs again. Without one, mergeSchema derives the union.
-        val raw = mf.physicalReadSchema match {
-          case Some(ps) => spark.read.schema(ps).parquet(dataPath)
-          case None => spark.read.option("mergeSchema", "true").parquet(dataPath)
-        }
         val m = mf.mapping
         val cols = raw.schema.fieldNames.toSeq.flatMap { physical =>
           if (m.isDropped(physical)) None
@@ -458,4 +466,5 @@ object SchemaEvolution {
         }
         raw.select(cols: _*)
     }
+  }
 }

@@ -96,4 +96,23 @@ class DeletionVectorSpec extends SparkSuite {
     ParquetTable.purgeDV(spark, dir)
     assert(ParquetTable.deleteWhere(spark, dir, "o_orderkey >= 1400") >= 0L)
   }
+
+  test("GraftSql reads honour deletion vectors: mount, count, VERSION AS OF, table_changes") {
+    val s = spark
+    import s.implicits._
+    val dir = graft.tables.TmpDirs.create("graft-dvsql").resolve("t").toString
+    ParquetTable.swap(spark, Seq(1L, 2L, 3L).toDF("id"), dir)
+    assert(ParquetTable.deleteWhereDV(spark, dir, "id = 2") == 1L)
+    graft.tables.GraftSql.register(spark, "dv_sql_t", dir, Seq("id"))
+    def ids(sql: String) =
+      graft.tables.GraftSql.sql(spark, sql).collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids("SELECT id FROM dv_sql_t") == Seq(1L, 3L))
+    assert(ids("SELECT count(*) FROM dv_sql_t") == Seq(2L))
+    assert(ids("SELECT id FROM dv_sql_t VERSION AS OF 2") == Seq(1L, 3L))
+    assert(ids("SELECT id FROM dv_sql_t VERSION AS OF 1") == Seq(1L, 2L, 3L))
+    val changes = graft.tables.GraftSql.sql(spark,
+      "SELECT id, _change_type FROM table_changes('dv_sql_t', 1, 2)").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSeq
+    assert(changes == Seq(2L -> "delete"))
+  }
 }

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-
 import graft.model._
 import graft.streaming.{CdcStreaming, ParquetTable}
 
@@ -14,31 +10,6 @@ import graft.streaming.{CdcStreaming, ParquetTable}
   * window-and-join flatten, whose stages AQE turned into a cascade of
   * broadcast jobs, or of the footer-inference read fails here. */
 class MergeBatchJobsSpec extends SparkSuite {
-
-  /** Jobs started per job group, with a flush: listener events arrive
-    * in order, so once a marker job's end is seen every earlier job's
-    * start has been counted. */
-  private final class JobCounter extends SparkListener {
-    val started = new ConcurrentHashMap[String, Integer]()
-    @volatile var markerEnded = false
-    private val markerJobs = ConcurrentHashMap.newKeySet[Int]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-      if (g == "jobs-spec-marker") markerJobs.add(e.jobId)
-      else started.merge(g, 1, (a: Integer, b: Integer) => a + b)
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      if (markerJobs.contains(e.jobId)) markerEnded = true
-    def flush(): Unit = {
-      val sc = spark.sparkContext
-      sc.setJobGroup("jobs-spec-marker", "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 10000
-      while (!markerEnded && System.currentTimeMillis() < deadline) Thread.sleep(5)
-      assert(markerEnded, "listener bus did not deliver the marker job")
-    }
-    def jobsOf(group: String): Int = Option(started.get(group)).map(_.intValue).getOrElse(0)
-  }
 
   private def rows(ids: Range, version: Double, csn: String): Seq[OrderStreamRow] =
     ids.map { i =>
@@ -70,7 +41,7 @@ class MergeBatchJobsSpec extends SparkSuite {
       counter.flush()
       counter.jobsOf(q.runId.toString)
     }
-    val counter = new JobCounter
+    val counter = new JobCounter(s)
     s.sparkContext.addSparkListener(counter)
     try {
       land(rows(1 to 200, 1.0, "001"))
